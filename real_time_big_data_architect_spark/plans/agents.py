@@ -152,10 +152,10 @@ def batch_insights(
     jobs per source (r7 verdict item 2).
 
     Values may be DataFrames or ZERO-ARG FACTORIES returning one: a
-    factory's plan construction (createDataFrame + normalize, ~40 ms of
-    py4j chatter each) then runs inside the same worker thread as the
-    branch's analysis and collect, overlapping across sources instead
-    of serializing before the wave.
+    factory's plan construction (``pipeline.payload_relation`` +
+    normalize, about a dozen py4j round trips) then runs inside the
+    same worker thread as the branch's analysis and collect,
+    overlapping across sources instead of serializing before the wave.
     """
     import json
     from concurrent.futures import ThreadPoolExecutor

@@ -24,6 +24,7 @@ from real_time_big_data_architect_spark.plans import agents
 from real_time_big_data_architect_spark.sources import normalize as norm
 from real_time_big_data_architect_spark.sources.http_poll import (
     HTTP_POLL_AVAILABLE,
+    MAX_POLL_ROWS_PER_BATCH,
     HttpPollDataSource,
 )
 from real_time_big_data_architect_spark.sources.registry import SOURCES
@@ -32,22 +33,18 @@ STATUS_SCHEMA = (
     "tick long, source string, n_rows long, headline string, agent string"
 )
 
-#: driver-funnel guard (r5 verdict item 6): the poll contract is ≤ 1
-#: row per source per tick (catalog = 10 sources), so a batch beyond
-#: this cap means a source is misbehaving — fail the stream LOUDLY
-#: instead of silently funnelling unbounded rows through the driver.
-#: Payload SIZE is already capped at fetch time
-#: (http_poll.MAX_PAYLOAD_BYTES), so cap × payload bounds the driver
-#: transfer absolutely.
-MAX_POLL_ROWS_PER_BATCH = 64
-
-
 def payload_relation(spark: SparkSession, payload: str) -> DataFrame:
     """One-row ``payload string`` relation built JVM-SIDE (range+lit →
     a codegen'd scan). ``createDataFrame`` would embed a Python-RDD
-    scan instead, and EVERY action on such a plan pays a Python worker
-    round-trip (~0.2 s measured) — per source, per tick."""
-    return spark.range(1).select(F.lit(payload).alias("payload"))
+    scan instead, and every action on such a plan would start a Python
+    task — per source, per tick.
+
+    The range has ONE slice: its output is then a single partition, so
+    a global aggregate over the normalized payload (the agents' per-
+    source pick) plans no Exchange and runs as one job with one task.
+    ``spark.range(1)`` takes the default parallelism in slices, and AQE
+    ran the resulting Exchange as two jobs per source."""
+    return spark.range(0, 1, 1, 1).select(F.lit(payload).alias("payload"))
 
 
 def _status_relation(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -61,14 +58,19 @@ def _status_relation(spark: SparkSession, rows: list[tuple]) -> DataFrame:
 
 
 def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
-    """Collect a poll batch with a hard row bound: ``limit(cap + 1)``
-    keeps the transfer executor-bounded even when the check fails."""
-    rows = batch_df.select(*cols).limit(MAX_POLL_ROWS_PER_BATCH + 1).collect()
+    """Collect a poll batch in one job and check the row bound.
+
+    The transfer is bounded where rows are created: the poll readers
+    emit one row per source and refuse more than
+    ``MAX_POLL_ROWS_PER_BATCH`` sources. A plain collect is one job;
+    ``limit(cap + 1).collect()`` ran as three serial jobs over the ten
+    poll partitions (CollectLimit's incremental take)."""
+    rows = batch_df.select(*cols).collect()
     if len(rows) > MAX_POLL_ROWS_PER_BATCH:
         raise RuntimeError(
             f"poll batch exceeded {MAX_POLL_ROWS_PER_BATCH} rows — the"
             " source contract is one row per source per tick; refusing"
-            " to funnel an unbounded batch through the driver"
+            " to process a misbehaving batch"
         )
     return rows
 
@@ -182,10 +184,10 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
         # Split the tick: fetch failures degrade immediately (C4, no
         # Spark work), healthy payloads normalize into per-source tidy
         # frames whose insights are computed by agents.batch_insights
-        # as ONE CONCURRENT WAVE of per-source aggregates (one action
-        # per source on driver threads) — the 10-source tick pays one
-        # wave's scheduling latency instead of 1-2 serial jobs per
-        # source (r7 verdict item 2: measured ~10 s → ~4 s per tick). A
+        # as ONE CONCURRENT WAVE of per-source aggregates (one action,
+        # one job, one task per source on driver threads) — the
+        # 10-source tick pays one wave's scheduling latency instead of
+        # serial jobs per source (LATENCY.md "Live tick"). A
         # per-source failure still degrades only its own row (C2-C5):
         # batch_insights dispatches each source's pick through the
         # shared C3 formatter/fallback.

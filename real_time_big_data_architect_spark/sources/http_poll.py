@@ -38,6 +38,15 @@ from real_time_big_data_architect_spark.streaming import progress
 #: into an error row at FETCH time, like every other fetch failure.
 MAX_PAYLOAD_BYTES = 16 * 1024 * 1024
 
+#: driver-funnel guard (r5 verdict item 6): the poll contract is one
+#: row per source per tick (catalog = 10 sources), and poll batches
+#: are collected to the driver (plans/pipeline.py). The all-sources
+#: readers refuse a source list beyond this cap, so a batch holds at
+#: most this many rows; with payload size capped at fetch time
+#: (MAX_PAYLOAD_BYTES), cap × payload bounds the driver transfer
+#: absolutely.
+MAX_POLL_ROWS_PER_BATCH = 64
+
 
 def fetch(
     url: str, headers: dict[str, str] | None = None, timeout: int = 15
@@ -175,6 +184,10 @@ try:
           URL (loopback servers in tests), falling back to the catalog
           for keys not present;
         - otherwise the catalog entry itself (live).
+
+        Raises ``ValueError`` for more than ``MAX_POLL_ROWS_PER_BATCH``
+        sources: each source is one row per tick, so the cap on sources
+        is the cap on a batch's rows.
         """
         from real_time_big_data_architect_spark.sources.registry import (
             SOURCES,
@@ -184,6 +197,13 @@ try:
             k for k in options.get("sources", ",".join(SOURCES)).split(",")
             if k
         ]
+        if len(keys) > MAX_POLL_ROWS_PER_BATCH:
+            raise ValueError(
+                f"http_poll_all: {len(keys)} sources exceed"
+                f" MAX_POLL_ROWS_PER_BATCH={MAX_POLL_ROWS_PER_BATCH}; each"
+                " source is one row per tick, and poll batches are"
+                " collected to the driver"
+            )
         overrides = json.loads(options.get("urls", "{}"))
         plan = []
         for key in keys:

@@ -78,6 +78,28 @@ STREAM_SHUFFLE_PARTITIONS = 8
 TWS_SHUFFLE_PARTITIONS = 16
 
 
+#: free space ``/dev/shm`` must offer before stream scratch defaults to
+#: it. Containers often cap the tmpfs at 64 MB, and drains keep data
+#: there (versioned parquet views, CDC snapshots), not just checkpoints;
+#: below this, scratch stays in the default temp dir on disk.
+SHM_SCRATCH_MIN_FREE_BYTES = 256 * 1024 * 1024
+
+
+def _shm_scratch_root() -> str | None:
+    """``/dev/shm`` if it is writable and has room, else None."""
+    import os
+
+    shm = "/dev/shm"
+    if not (os.path.isdir(shm) and os.access(shm, os.W_OK)):
+        return None
+    try:
+        st = os.statvfs(shm)
+    except OSError:
+        return None
+    free = st.f_bavail * st.f_frsize
+    return shm if free >= SHM_SCRATCH_MIN_FREE_BYTES else None
+
+
 def stream_scratch_dir(prefix: str) -> str:
     """mkdtemp for EPHEMERAL streaming scratch (checkpoints, versioned
     view dirs) — RAM-backed when the host offers it.
@@ -89,7 +111,9 @@ def stream_scratch_dir(prefix: str) -> str:
     write+rename per store instance per batch, which on a slow-metadata
     disk dominates small-batch drains (measured ~5-8 s of summed
     commitTimeMs per batch on the stream-stream joins at sf0.1).
-    Scratch therefore defaults to ``/dev/shm`` (tmpfs) when present.
+    Scratch therefore defaults to ``/dev/shm`` (tmpfs) when present
+    with at least ``SHM_SCRATCH_MIN_FREE_BYTES`` free, and to the
+    default temp dir otherwise.
 
     Parameterised, not pinned: ``SPARK_GRAFT_STREAM_SCRATCH`` overrides
     the root (a production LONG-LIVED stream must point its checkpoint
@@ -100,10 +124,7 @@ def stream_scratch_dir(prefix: str) -> str:
     import os
     import tempfile
 
-    root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-    if not root:
-        shm = "/dev/shm"
-        root = shm if os.path.isdir(shm) and os.access(shm, os.W_OK) else None
+    root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH") or _shm_scratch_root()
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 

@@ -5,6 +5,7 @@ pipeline against a loopback HTTP server."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, HTTPServer
@@ -166,8 +167,8 @@ def test_offline_all_sources_tick_covers_catalog(spark):
 
 def test_oversized_poll_batch_fails_loudly(spark):
     """r5 verdict item 6: a poll batch beyond MAX_POLL_ROWS_PER_BATCH
-    must refuse the driver funnel with a clear error (and the failing
-    check itself only ever collects cap+1 rows, via limit)."""
+    must be refused with a clear error (the poll readers bound the
+    transfer itself where rows are created; see the test below)."""
     big = spark.range(pipeline.MAX_POLL_ROWS_PER_BATCH + 5).selectExpr(
         "'{}' AS payload", "CAST(NULL AS STRING) AS error"
     )
@@ -180,3 +181,65 @@ def test_oversized_poll_batch_fails_loudly(spark):
     )
     out = pipeline.process_tick(spark, ok, "binance", tick=0).collect()
     assert len(out) == 1 and out[0].source == "binance"
+
+
+_PAYLOAD_DIR = os.path.join(os.path.dirname(__file__), "payloads")
+
+
+@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+def test_poll_all_read_refuses_more_sources_than_the_row_cap(spark):
+    """The row cap is enforced where rows are created: each source is
+    one row per tick, so an http_poll_all read naming more sources than
+    MAX_POLL_ROWS_PER_BATCH is refused before any poll runs."""
+    keys = [f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)]
+    with pytest.raises(Exception, match="MAX_POLL_ROWS_PER_BATCH"):
+        (
+            spark.read.format("http_poll_all")
+            .option("payload_dir", _PAYLOAD_DIR)
+            .option("sources", ",".join(keys))
+            .load()
+            .collect()
+        )
+
+
+@pytest.mark.parametrize("source", ["binance", "usgs_quakes", "github_events"])
+def test_agents_branch_plans_no_exchange(spark, source):
+    """A batch_insights branch (normalize(payload_relation) → global
+    agg) runs on the one-slice payload relation's single partition: no
+    Exchange, so one job with one task per source per tick."""
+    from pyspark.sql import functions as F
+
+    from real_time_big_data_architect_spark.sources import normalize as norm
+
+    with open(os.path.join(_PAYLOAD_DIR, f"{source}.json")) as f:
+        payload = f.read()
+    tidy = norm.normalize(pipeline.payload_relation(spark, payload), source)
+    branch = tidy.agg(F.count(F.lit(1)).alias("n"))
+    assert branch.collect()[0].n >= 1
+    plan = branch._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+def test_bounded_rows_collects_a_poll_batch_in_one_job(spark):
+    """The per-tick poll collect over the ten poll partitions is a single
+    Spark job (a limit(cap + 1) collect ran as three serial jobs)."""
+    from real_time_big_data_architect_spark.sources.http_poll import (
+        register_http_poll,
+    )
+
+    register_http_poll(spark)
+    raw = spark.read.format("http_poll_all").option(
+        "payload_dir", _PAYLOAD_DIR
+    ).load()
+    sc = spark.sparkContext
+    group = "bounded_rows_one_job"
+    sc.setJobGroup(group, "poll batch collect")
+    try:
+        rows = pipeline._bounded_rows(raw, ["source", "payload", "error"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(rows) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

@@ -369,3 +369,45 @@ def test_poisoned_json_documents_cannot_kill_extraction(spark):
     # string path: overflow nulls via try_cast, duplicate keys read the
     # FIRST occurrence (the documented engine-internal inconsistency)
     assert got2 == {1: None, 2: 1, 3: 7, 4: None}
+
+
+def test_stream_scratch_skips_a_nearly_full_dev_shm(monkeypatch, tmp_path):
+    """ADVICE (medium): /dev/shm is often capped at 64 MB in containers,
+    so stream scratch checks its free space and falls back to the
+    default temp dir below SHM_SCRATCH_MIN_FREE_BYTES."""
+    import tempfile
+
+    from real_time_big_data_architect_spark.streaming import stateful
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    real_statvfs = os.statvfs
+
+    def statvfs_with_free(free_bytes):
+        def fake(path):
+            st = real_statvfs(path)
+            if path != "/dev/shm":
+                return st
+            return os.statvfs_result(
+                (st.f_bsize, 4096, st.f_blocks, st.f_bfree,
+                 free_bytes // 4096, st.f_files, st.f_ffree, st.f_favail,
+                 st.f_flag, st.f_namemax)
+            )
+        return fake
+
+    monkeypatch.setattr(
+        os, "statvfs",
+        statvfs_with_free(stateful.SHM_SCRATCH_MIN_FREE_BYTES - 4096),
+    )
+    low = stateful.stream_scratch_dir("shm_check_")
+    assert os.path.dirname(low) == str(tmp_path)
+    os.rmdir(low)
+
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        pytest.skip("no writable /dev/shm on this host")
+    monkeypatch.setattr(
+        os, "statvfs", statvfs_with_free(stateful.SHM_SCRATCH_MIN_FREE_BYTES)
+    )
+    roomy = stateful.stream_scratch_dir("shm_check_")
+    assert os.path.dirname(roomy) == "/dev/shm"
+    os.rmdir(roomy)
