@@ -648,8 +648,10 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # register_views would fail on partial dirs like the scale probes')
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     edges = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    edges.createOrReplaceTempView("__reach_edges")
-    return spark.sql(_REACH_RECURSIVE_SQL_OVER_VIEW)
+    # a DataFrame argument binds through a uuid-named temp view that
+    # spark.sql drops once the query is analyzed: nothing is left in
+    # the session's catalog
+    return spark.sql(_REACH_RECURSIVE_SQL_OVER_VIEW, edges=edges)
 
 
 def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,10 +729,11 @@ _REACH_RECURSIVE_SQL = f"""
 """
 
 #: the Spark-side execution form: the same recurrence, but joining the
-#: pre-materialized `__reach_edges` temp view instead of an inline
-#: edges CTE that UnionLoop would re-derive from events every hop (see
-#: recursive_cte_reachability docstring). The seed member and the
-#: walk recurrence are token-identical to _REACH_RECURSIVE_SQL.
+#: pre-materialized edge relation (the ``{edges}`` argument of
+#: ``spark.sql``) instead of an inline edges CTE that UnionLoop would
+#: re-derive from events every hop (see recursive_cte_reachability
+#: docstring). The seed member and the walk recurrence are
+#: token-identical to _REACH_RECURSIVE_SQL.
 _REACH_RECURSIVE_SQL_OVER_VIEW = f"""
     WITH RECURSIVE
     walk(user_id, dist) AS (
@@ -738,7 +741,7 @@ _REACH_RECURSIVE_SQL_OVER_VIEW = f"""
         WHERE user_id % {BFS_SEED_MOD} = 0
         UNION ALL
         SELECT DISTINCT e.dst, w2.dist + 1
-        FROM walk w2 JOIN __reach_edges e ON e.src = w2.user_id
+        FROM walk w2 JOIN {{edges}} e ON e.src = w2.user_id
         WHERE w2.dist < {BFS_MAX_HOPS}
     )
     SELECT user_id, CAST(MIN(dist) AS INT) AS dist

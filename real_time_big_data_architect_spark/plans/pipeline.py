@@ -3,7 +3,7 @@
 ``app.py`` per tick: fetch (app.py:67-81) → normalize_to_df
 (app.py:84-189) → render + agent commentary (app.py:192-247). Here the
 same loop is: http_poll streaming source → ``foreachBatch`` →
-normalize → :mod:`plans.agents` commentary → status-record sink.
+normalize → :mod:`plans.agents` commentary → status-table append.
 Errors degrade exactly like the reference: a failed fetch or empty
 normalization produces a fallback status row, never a crashed stream
 (C2-C5).
@@ -15,9 +15,10 @@ against a loopback HTTP server — no external network.
 
 from __future__ import annotations
 
+import json
 from dataclasses import asdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from real_time_big_data_architect_spark.plans import agents
@@ -47,14 +48,34 @@ def payload_relation(spark: SparkSession, payload: str) -> DataFrame:
     return spark.range(0, 1, 1, 1).select(F.lit(payload).alias("payload"))
 
 
-def _status_relation(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """Catalog-sized status rows as a JVM-side ``VALUES`` relation —
-    same Python-RDD-scan avoidance as :func:`payload_relation`, for the
-    per-tick status append (≤ 1 row per catalog source by the
-    MAX_POLL_ROWS_PER_BATCH contract)."""
-    from real_time_big_data_architect_spark.tables import jvm_local_df
+def _status_row(tick: int, insight: agents.Insight) -> Row:
+    """One status record: the tick id plus the agent's insight, in
+    ``STATUS_SCHEMA`` column order."""
+    return Row(tick=tick, **asdict(insight))
 
-    return jvm_local_df(spark, rows, STATUS_SCHEMA)
+
+def _status_appender(spark: SparkSession, table: str):
+    """Create ``table`` (``STATUS_SCHEMA``, parquet) if absent and
+    return the per-tick append ``rows -> None``.
+
+    Each append is ONE bound SQL statement: the tick's status rows
+    travel as one JSON parameter and ``inline(from_json(...))`` expands
+    them JVM-side, so an append costs a fixed few py4j calls however
+    many sources the tick has, and no Python task."""
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS IDENTIFIER(:t) ({STATUS_SCHEMA})"
+        " USING parquet",
+        args={"t": table},
+    )
+
+    def append(rows: list[Row]) -> None:
+        spark.sql(
+            "INSERT INTO IDENTIFIER(:t) SELECT inline(from_json(:rows,"
+            f" 'array<struct<{STATUS_SCHEMA}>>'))",
+            args={"t": table, "rows": json.dumps([r.asDict() for r in rows])},
+        )
+
+    return append
 
 
 def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
@@ -63,8 +84,8 @@ def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
     The transfer is bounded where rows are created: the poll readers
     emit one row per source and refuse more than
     ``MAX_POLL_ROWS_PER_BATCH`` sources. A plain collect is one job;
-    ``limit(cap + 1).collect()`` ran as three serial jobs over the ten
-    poll partitions (CollectLimit's incremental take)."""
+    ``limit(cap + 1).collect()`` runs CollectLimit's incremental take,
+    up to three serial jobs over a many-partition batch."""
     rows = batch_df.select(*cols).collect()
     if len(rows) > MAX_POLL_ROWS_PER_BATCH:
         raise RuntimeError(
@@ -77,8 +98,9 @@ def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
 
 def process_tick(
     spark: SparkSession, batch_df: DataFrame, source_key: str, tick: int
-) -> DataFrame:
-    """One micro-batch: raw (fetch_ts, payload, error) rows → status row.
+) -> Row:
+    """One micro-batch: raw (fetch_ts, payload, error) rows → the
+    tick's status row (``STATUS_SCHEMA``).
 
     The poll source emits one row per tick; normalize + agents run on
     it just like the reference's script body runs per refresh.
@@ -93,10 +115,7 @@ def process_tick(
         else:
             tidy = norm.normalize(payload_relation(spark, payload), source_key)
             insight = agents.commentary(tidy, source_key)
-    d = asdict(insight)
-    return _status_relation(
-        spark, [(tick, d["source"], d["n_rows"], d["headline"], d["agent"])]
-    )
+    return _status_row(tick, insight)
 
 
 def run_poll_pipeline(
@@ -110,7 +129,7 @@ def run_poll_pipeline(
 ):
     """Start the live loop for one catalog source; returns the query.
 
-    Status rows append to ``status_table`` (a memory sink), one per
+    Status rows append to the managed table ``status_table``, one per
     tick — the engine's analog of the reference's rendered page.
     """
     if not HTTP_POLL_AVAILABLE:  # pragma: no cover
@@ -124,14 +143,12 @@ def run_poll_pipeline(
         .option("timeout", str(spec.timeout_s))
         .load()
     )
-    ticks = {"n": 0}
+    append_status = _status_appender(spark, status_table)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ticks["n"] += 1
-        status = process_tick(batch_df.sparkSession, batch_df, source_key, batch_id)
-        # managed table append — the durable analog of the reference's
-        # rendered page; one status row per tick survives the stream
-        status.write.mode("append").saveAsTable(status_table)
+        append_status(
+            [process_tick(batch_df.sparkSession, batch_df, source_key, batch_id)]
+        )
 
     writer = stream.writeStream.foreachBatch(on_batch)
     if available_now:
@@ -155,10 +172,11 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     """Start the CONCURRENT every-source loop; returns the query.
 
     Exceeds the reference's 1-of-10 selectbox tick (app.py:57-61): each
-    micro-batch fans the whole catalog out as one ``http_poll_all``
-    read (one partition = one source = one parallel task) and appends
-    one status row per source per tick. A failing or slow endpoint
-    degrades only its own row (C2-C5 per source), never the tick.
+    micro-batch polls the whole catalog as one ``http_poll_all`` read
+    (every source fetched at once on the driver, one thread per source)
+    and appends one status row per source per tick. A failing or slow
+    endpoint degrades only its own row (C2-C5 per source), never the
+    tick.
     """
     if not HTTP_POLL_AVAILABLE:  # pragma: no cover
         raise NotImplementedError("Python DataSource API unavailable")
@@ -171,12 +189,11 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     if payload_dir:
         reader = reader.option("payload_dir", payload_dir)
     if url_overrides:
-        import json as _json
-
-        reader = reader.option("urls", _json.dumps(url_overrides))
+        reader = reader.option("urls", json.dumps(url_overrides))
     if sources:
         reader = reader.option("sources", ",".join(sources))
     stream = reader.load()
+    append_status = _status_appender(spark, status_table)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -198,10 +215,7 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
                 insight = agents.commentary(
                     None, r.source, fetch_error=r.error or "no payload"
                 )
-                d = asdict(insight)
-                status_parts.append(
-                    (batch_id, d["source"], d["n_rows"], d["headline"], d["agent"])
-                )
+                status_parts.append(_status_row(batch_id, insight))
             else:
                 # a zero-arg factory: batch_insights builds the tidy
                 # plan inside the branch's own worker thread, so the
@@ -215,14 +229,9 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
                 tidies[r.source] = _tidy
         if tidies:
             for insight in agents.batch_insights(tidies).values():
-                d = asdict(insight)
-                status_parts.append(
-                    (batch_id, d["source"], d["n_rows"], d["headline"], d["agent"])
-                )
+                status_parts.append(_status_row(batch_id, insight))
         if status_parts:
-            _status_relation(sp, status_parts).write.mode("append").saveAsTable(
-                status_table
-            )
+            append_status(status_parts)
 
     writer = stream.writeStream.foreachBatch(on_batch)
     if checkpoint_location:

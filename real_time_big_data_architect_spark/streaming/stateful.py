@@ -712,9 +712,10 @@ def stage_cdc_feed(
     spark: SparkSession, sf_dir: str, work: str
 ) -> tuple:
     """Stage the CDC fixture for a streaming apply under ``work``:
-    write the parity-split 2-file change feed to ``work/feed`` and seed
-    the committed view pointer with v1 as version -1. Returns
-    ``(feed_schema, feed_dir, seed_dir)``. Factored out of
+    write the parity-split change feed (one file per key parity that
+    has rows) to ``work/feed`` and seed the committed view pointer
+    with v1 as version -1. Returns ``(feed_schema, feed_dir,
+    seed_dir)``. Factored out of
     :func:`stream_cdc_apply` so crash-recovery tests can stage the same
     feed and drive the drain with a fault-injected apply body.
     """
@@ -754,8 +755,11 @@ def stage_cdc_feed(
             .parquet(tmp_out)
         )
         for i in range(2):
-            src = glob.glob(f"{tmp_out}/__p={i}/part-*.parquet")[0]
-            shutil.move(src, f"{feed_dir}/feed{i}.parquet")
+            # a parity with no rows has no partition directory; its
+            # batch is then absent from the feed
+            files = glob.glob(f"{tmp_out}/__p={i}/part-*.parquet")
+            if files:
+                shutil.move(files[0], f"{feed_dir}/feed{i}.parquet")
         shutil.rmtree(tmp_out, ignore_errors=True)
         # seed the committed view with v1 as version -1
         seed_dir = f"{work}/view_seed"

@@ -39,6 +39,19 @@ def test_count_triangles_planted_graphs(spark):
     assert graph.count_triangles(und).collect()[0].n_triangles == 0
 
 
+def test_count_triangles_edge_iterator_plan_at_switch_point(spark):
+    """At TRIANGLE_EDGE_ITER_MIN_EDGES the edge-iterator plan runs and
+    counts the planted graphs exactly as the wedge plan does."""
+    hint = graph.TRIANGLE_EDGE_ITER_MIN_EDGES
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    und = spark.createDataFrame(k4 + [(4, 5), (5, 6), (7, 8)], "a long, b long")
+    assert graph.count_triangles(und, n_edges_hint=hint).collect()[0].n_triangles == 4
+    star = [(1, n) for n in range(2, 7)]
+    cycle = [(10, 11), (11, 12), (12, 13), (10, 13)]
+    und = spark.createDataFrame(star + cycle, "a long, b long")
+    assert graph.count_triangles(und, n_edges_hint=hint).collect()[0].n_triangles == 0
+
+
 def test_triangle_count_matches_naive(spark, sf_small):
     from itertools import combinations
 
@@ -210,8 +223,11 @@ def test_recursive_cte_matches_frontier_loop(spark, sf_small):
     from real_time_big_data_architect_spark.operators import graph as G
 
     loop = {(r.user_id, r.dist) for r in G.bfs_khop(spark, sf_small).collect()}
-    rec = {
-        (r.user_id, r.dist)
-        for r in G.recursive_cte_reachability(spark, sf_small).collect()
-    }
+    views_before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    reach = G.recursive_cte_reachability(spark, sf_small)
+    views_after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    rec = {(r.user_id, r.dist) for r in reach.collect()}
     assert rec == loop and loop
+    # the edge relation's temp view is dropped once the query is built;
+    # only the events view the query reads stays registered
+    assert views_after - views_before <= {"events"}, views_after

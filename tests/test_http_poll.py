@@ -125,3 +125,34 @@ def test_http_poll_datasource_end_to_end(spark, server):
     assert row.error is None
     assert json.loads(row.payload)["price"] == "64250.10"
     assert row.fetch_ts > 0
+
+
+@pytest.mark.skipif(
+    not http_poll.HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable"
+)
+def test_all_sources_stream_reader_fetches_every_source_at_once(monkeypatch):
+    """The all-sources stream reader polls every planned source at the
+    same time (each poll waits at a barrier only all of them together
+    can pass), returns the rows in plan order although the polls finish
+    in reverse order, and advances the offset by one poll."""
+    import time
+
+    from real_time_big_data_architect_spark.sources.registry import SOURCES
+
+    keys = list(SOURCES)
+    barrier = threading.Barrier(len(keys), timeout=5)
+
+    def concurrent_poll(options):
+        barrier.wait()
+        key = options["payload_path"].rsplit("/", 1)[1].removesuffix(".json")
+        time.sleep(0.02 * (len(keys) - keys.index(key)))
+        return 1.0, f"payload of {key}", None
+
+    monkeypatch.setattr(http_poll, "_poll_once", concurrent_poll)
+    reader = http_poll.HttpPollAllDataSource(
+        {"payload_dir": "/payloads"}
+    ).simpleStreamReader(None)
+    rows, end = reader.read({"poll": 0})
+    assert [r[1] for r in rows] == keys
+    assert [r[2] for r in rows] == [f"payload of {k}" for k in keys]
+    assert end == {"poll": 1}

@@ -77,11 +77,22 @@ def test_live_loop_degrades_on_http_error(spark, server):
     assert "unavailable" in r.headline
 
 
+#: a quake place with every character a status append must carry
+#: through unchanged: quote, backslash, double quote, newline, non-ASCII
+_ODD_PLACE = 'it\'s a \\ "odd"\nplace at 21°C'
+
+
 class _MultiHandler(BaseHTTPRequestHandler):
-    """Loopback catalog: binance + coingecko succeed, usgs fails."""
+    """Loopback catalog: binance + coingecko succeed, usgs fails;
+    /odd_quake serves one quake at ``_ODD_PLACE``."""
 
     def do_GET(self):  # noqa: N802
-        if self.path.startswith("/binance"):
+        if self.path.startswith("/odd_quake"):
+            body, code = json.dumps({"features": [{"properties": {
+                "time": 1700000000000, "mag": 2.5, "place": _ODD_PLACE,
+                "type": "earthquake",
+            }}]}), 200
+        elif self.path.startswith("/binance"):
             body, code = json.dumps(
                 {"symbol": "BTCUSDT", "price": "64250.10"}
             ), 200
@@ -179,7 +190,7 @@ def test_oversized_poll_batch_fails_loudly(spark):
         "'{\"symbol\": \"BTCUSDT\", \"price\": \"1.0\"}' AS payload",
         "CAST(NULL AS STRING) AS error",
     )
-    out = pipeline.process_tick(spark, ok, "binance", tick=0).collect()
+    out = [pipeline.process_tick(spark, ok, "binance", tick=0)]
     assert len(out) == 1 and out[0].source == "binance"
 
 
@@ -243,3 +254,70 @@ def test_bounded_rows_collects_a_poll_batch_in_one_job(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(rows) == 10
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
+    """A loop restarted from its checkpoint carries on from the
+    checkpointed poll offset: every source offset rises across the
+    restart, and every tick of both runs leaves one status row per
+    source."""
+    ckpt = str(tmp_path / "ckpt")
+    table = "status_all_restart"
+    sources = ["binance", "iss_now"]
+    offsets = []
+    for _ in range(2):
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            payload_dir=_PAYLOAD_DIR,
+            sources=sources,
+            status_table=table,
+            available_now=True,
+            checkpoint_location=ckpt,
+        )
+        assert q.awaitTermination(120)
+        for p in q.recentProgress:
+            src = json.loads(p.json)["sources"][0]
+            offsets.append((src["startOffset"], src["endOffset"]))
+    ticks = [end["poll"] for _, end in offsets]
+    assert len(ticks) >= 2 and ticks == sorted(set(ticks)), offsets
+    rows = spark.table(table).collect()
+    spark.sql(f"DROP TABLE {table}")
+    by_tick: dict[int, list[str]] = {}
+    for r in rows:
+        by_tick.setdefault(r.tick, []).append(r.source)
+    assert sorted(by_tick) == list(range(len(ticks)))
+    assert all(sorted(v) == sorted(sources) for v in by_tick.values()), by_tick
+
+
+@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+@pytest.mark.parametrize("table_exists", [False, True])
+def test_status_append_keeps_headline_bytes(spark, multi_server, table_exists):
+    """The per-tick status append lands a headline holding quotes, a
+    backslash, a newline and non-ASCII text byte for byte, with tick and
+    n_rows as bigint — whether the loop creates the status table or
+    appends to one that already exists."""
+    table = f"status_odd_{int(table_exists)}"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    if table_exists:
+        spark.sql(
+            f"CREATE TABLE {table} ({pipeline.STATUS_SCHEMA}) USING parquet"
+        )
+        spark.sql(f"INSERT INTO {table} VALUES (99, 'earlier', 0, 'x', 'fallback')")
+    q = pipeline.run_poll_all_pipeline(
+        spark,
+        url_overrides={"usgs_quakes": f"{multi_server}/odd_quake"},
+        sources=["usgs_quakes"],
+        status_table=table,
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    status = spark.table(table)
+    types = dict(status.dtypes)
+    rows = {r.source: r for r in status.collect()}
+    spark.sql(f"DROP TABLE {table}")
+    assert (types["tick"], types["n_rows"]) == ("bigint", "bigint")
+    assert set(rows) == ({"usgs_quakes", "earlier"} if table_exists else {"usgs_quakes"})
+    quake = rows["usgs_quakes"]
+    assert (quake.tick, quake.n_rows, quake.agent) == (0, 1, "primary")
+    assert quake.headline == f"latest quake M2.5 @ {_ODD_PLACE}"

@@ -411,3 +411,25 @@ def test_stream_scratch_skips_a_nearly_full_dev_shm(monkeypatch, tmp_path):
     roomy = stateful.stream_scratch_dir("shm_check_")
     assert os.path.dirname(roomy) == "/dev/shm"
     os.rmdir(roomy)
+
+
+def test_stage_cdc_feed_with_an_empty_parity(spark, sf_small, tmp_path, monkeypatch):
+    """A change feed whose keys all share one parity stages that
+    parity's file alone (the other parity has no partition directory)."""
+    from real_time_big_data_architect_spark.operators import mutations
+    from real_time_big_data_architect_spark.streaming import stateful
+
+    full_feed = mutations._cdc_feed
+    monkeypatch.setattr(
+        mutations,
+        "_cdc_feed",
+        lambda v1, v2: full_feed(v1, v2).filter(F.col("o_orderkey") % 2 == 0),
+    )
+    work = tmp_path / "cdc"
+    work.mkdir()
+    _, feed_dir, _ = stateful.stage_cdc_feed(spark, sf_small, str(work))
+    assert sorted(os.listdir(feed_dir)) == ["feed0.parquet"]
+    v1 = mutations._cdc_v1(spark, sf_small)
+    want = mutations._cdc_feed(v1, mutations._cdc_v2(v1)).count()
+    assert want > 0
+    assert spark.read.parquet(f"{feed_dir}/feed0.parquet").count() == want
