@@ -354,39 +354,8 @@ def main() -> None:
     spark.stop()
 
 
-def _recover_from_tail(rec: dict, sf_dir: str) -> dict | None:
-    """Recover per-query timings from a record whose ``parsed`` field
-    is null because the driver kept only a truncated ``tail`` of the
-    output line (observed on BENCH_r05.json). The queries dict is the
-    text before the ``}, "sf":`` marker; pairs in the partial fragment
-    keep their quoting, so a quoted-key regex extracts every complete
-    entry and silently drops the cut-off first one."""
-    import re
-
-    tail = rec.get("tail")
-    if not isinstance(tail, str) or '}, "sf":' not in tail:
-        return None
-    if str(rec.get("sf", "")) not in sf_dir:
-        return None
-    head = tail.split('}, "sf":')[0]
-    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.]*)', head)
-    if pairs and len(pairs) < len(HEADLINE):
-        # make the silently-cut first entries visible (ADVICE r6): a
-        # recovered baseline that skips queries would silently exempt
-        # them from the regression comparison
-        import sys
-
-        print(
-            f"bench: recovered {len(pairs)}/{len(HEADLINE)} baseline"
-            " entries from truncated tail record",
-            file=sys.stderr,
-        )
-    return {k: float(v) for k, v in pairs} or None
-
-
 def _latest_recorded(sf_dir: str) -> dict[str, float] | None:
-    """Per-query timings from the newest BENCH_r*.json at the same SF
-    (tail-recovered when the driver stored a truncated line)."""
+    """Per-query timings from the newest BENCH_r*.json at the same SF."""
     import glob
     import re
 
@@ -402,14 +371,10 @@ def _latest_recorded(sf_dir: str) -> dict[str, float] | None:
             if rec.get("rc", 0) != 0:
                 continue
             parsed = rec.get("parsed") or rec
-            if "queries" in parsed and str(parsed.get("sf")) in sf_dir:
-                queries = parsed["queries"]
-            else:
-                queries = _recover_from_tail(rec, sf_dir)
-                if queries is None:
-                    continue
+            if "queries" not in parsed or str(parsed.get("sf")) not in sf_dir:
+                continue
             if best is None or int(m.group(1)) > best[0]:
-                best = (int(m.group(1)), queries)
+                best = (int(m.group(1)), parsed["queries"])
         except (OSError, ValueError):
             continue
     return best[1] if best else None

@@ -75,8 +75,7 @@ def _loop_shuffle_conf(spark: SparkSession, n_rows: int):
     same SparkSession while a loop holds this scope would bind the
     loop's (small) partition count. The engine's execution contract is
     one query at a time per session (bench/preflight/driver all run
-    serially; ``batch_insights``' intra-query threads never overlap a
-    loop operator); a harness that wants concurrent loop queries must
+    serially); a harness that wants concurrent loop queries must
     isolate them with ``spark.newSession()`` per thread, which scopes
     runtime confs. Per-plan REPARTITION hints were considered and
     rejected: they pin exact partition counts and defeat AQE's

@@ -2,20 +2,24 @@
 
 Agent 1 (:func:`snapshot_insights`) validates the batch and computes the
 reference's per-source insight queries with DataFrame ops; it raises on
-an empty table exactly like ``agent_1`` (app.py:194-195). Agent 2
-(:func:`fallback_insight`) is the degrade path. :func:`commentary` is
-the try/except dispatcher (``agentic_commentary``, app.py:242-247),
-usable directly inside ``foreachBatch`` — each micro-batch gets a
-status record instead of a crashed stream.
+an empty table exactly like ``agent_1`` (app.py:194-195);
+:func:`batch_insights` is the same agent over a whole catalog tick as
+one Spark statement. Agent 2 (:func:`fallback_insight`) is the degrade
+path. :func:`commentary` is the try/except dispatcher
+(``agentic_commentary``, app.py:242-247), usable directly inside
+``foreachBatch`` — each micro-batch gets a status record instead of a
+crashed stream.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from real_time_big_data_architect_spark.sources import normalize as norm
 
 
 class EmptyBatchError(ValueError):
@@ -101,11 +105,14 @@ def snapshot_insights(df: DataFrame, source: str) -> Insight:
 #: NULL ordering keys exactly like na.drop / the desc-nulls-last first
 #: row that the direct path would format (a NULL pick field then raises
 #: the same TypeError under the shared formatter → same C3 fallback).
+#: Value casts are ``try_cast``: under ANSI mode a malformed value
+#: ("n/a") must become NULL — and so this source's fallback — instead
+#: of failing the whole tick's statement.
 _PICK_EXPRS: dict[str, str] = {
     "coingecko": (
         "named_struct("
         " 'usd', max(CASE WHEN asset = 'bitcoin'"
-        "       THEN CAST(usd AS DOUBLE) END),"
+        "       THEN try_cast(usd AS DOUBLE) END),"
         " 'present', count(CASE WHEN asset = 'bitcoin' THEN 1 END) > 0)"
     ),
     "usgs_quakes": (
@@ -129,102 +136,11 @@ _PICK_EXPRS: dict[str, str] = {
         " 'wind_speed_10m', wind_speed_10m))"
     ),
     "iss_now": (
-        "first(named_struct('lat', CAST(latitude AS DOUBLE),"
-        " 'lon', CAST(longitude AS DOUBLE)))"
+        "first(named_struct('lat', try_cast(latitude AS DOUBLE),"
+        " 'lon', try_cast(longitude AS DOUBLE)))"
     ),
-    "binance": "first(named_struct('p', CAST(price AS DOUBLE)))",
+    "binance": "first(named_struct('p', try_cast(price AS DOUBLE)))",
 }
-
-
-def batch_insights(
-    tidies: dict[str, "DataFrame | Any"],
-) -> dict[str, Insight]:
-    """Agent 1 over a WHOLE catalog tick, one concurrent action per
-    source.
-
-    Each source's tidy frame contributes a one-row aggregate branch
-    ``(source, n, pick-json)``, collected concurrently across driver
-    threads, and the shared formatter renders headlines driver-side
-    from the collected picks. Semantics match per-source
-    :func:`snapshot_insights` + the C3 dispatcher (same formatter, same
-    empty-batch and malformed-pick degrades); cost is the scheduling
-    fixed cost of ONE concurrent wave per tick instead of 1-2 serial
-    jobs per source (r7 verdict item 2).
-
-    Values may be DataFrames or ZERO-ARG FACTORIES returning one: a
-    factory's plan construction (``pipeline.payload_relation`` +
-    normalize, about a dozen py4j round trips) then runs inside the
-    same worker thread as the branch's analysis and collect,
-    overlapping across sources instead of serializing before the wave.
-    """
-    import json
-    from concurrent.futures import ThreadPoolExecutor
-
-    out: dict[str, Insight] = {}
-
-    # One action per source, all submitted concurrently: the dominant
-    # per-branch cost is JVM-side analysis/optimization of the
-    # from_json plan (~0.3 s each), which parallelizes across driver
-    # threads — a union would analyze all ten branches serially in one
-    # thread. A failing branch degrades through the per-source C3
-    # dispatcher, exactly like the sequential path.
-    def _one(source: str) -> tuple[str, Any]:
-        spec = tidies[source]
-        try:
-            df = spec() if callable(spec) else spec
-        except Exception as exc:  # noqa: BLE001 — C4/C3: the payload
-            # can't even become a tidy frame for this source
-            return source, fallback_insight(source, str(exc))
-        pick = _PICK_EXPRS.get(source)
-        try:
-            branch = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                (
-                    F.expr(f"to_json({pick})")
-                    if pick
-                    else F.lit(None).cast("string")
-                ).alias("pick"),
-            ).select(F.lit(source).alias("source"), "n", "pick")
-            return source, branch.collect()[0]
-        except Exception:  # noqa: BLE001 — C3 per source: fall back to
-            # the sequential dispatcher over the built tidy frame
-            return source, commentary(df, source)
-
-    with ThreadPoolExecutor(max_workers=max(len(tidies), 1)) as pool:
-        results = list(pool.map(_one, list(tidies)))
-    collected = []
-    for source, res in results:
-        if isinstance(res, Insight):
-            out[source] = res
-        else:
-            collected.append(res)
-    for r in collected:
-        source, n = r["source"], r["n"]
-        try:
-            if n == 0:
-                raise EmptyBatchError(f"{source}: empty batch")
-            pick = json.loads(r["pick"]) if r["pick"] is not None else None
-            if source == "coingecko":
-                # to_json drops NULL fields: present=false ⇒ no bitcoin
-                # row ⇒ the direct path's first() returned None
-                pick = (
-                    {"usd": pick.get("usd")} if pick.get("present") else None
-                )
-            elif pick is not None and _PICK_EXPRS.get(source):
-                # restore fields to_json dropped as NULL so the shared
-                # formatter sees the same keys the direct path would
-                for k in _PICK_KEYS[source]:
-                    pick.setdefault(k, None)
-            out[source] = Insight(
-                source=source,
-                n_rows=n,
-                headline=_render_headline(source, n, pick),
-                agent="primary",
-            )
-        except Exception as exc:  # noqa: BLE001 — C3: degrade per source
-            out[source] = fallback_insight(source, str(exc))
-    return out
-
 
 _PICK_KEYS = {
     "coingecko": ("usd",),
@@ -234,6 +150,102 @@ _PICK_KEYS = {
     "iss_now": ("lat", "lon"),
     "binance": ("p",),
 }
+
+
+def _branch_sql(source: str, param: str) -> str:
+    """One source's ``(source, n, pick-json)`` aggregate over its
+    normalize branch, the payload bound as the named parameter
+    ``param``. The payload relation is a ONE-slice range: a single
+    partition, so the global aggregate plans no Exchange."""
+    pick = _PICK_EXPRS.get(source)
+    tidy = norm.sql_over(
+        source, f"(SELECT :{param} AS payload FROM range(0, 1, 1, 1))"
+    )
+    return (
+        f"SELECT '{source}' AS source, count(1) AS n,"
+        f" {f'to_json({pick})' if pick else 'CAST(NULL AS STRING)'} AS pick"
+        f" FROM ({tidy})"
+    )
+
+
+def _picks(spark, payloads: dict[str, str]) -> DataFrame:
+    """Every source's branch as ONE ``UNION ALL`` statement (one
+    analysis, one job): a ``(source, n, pick)`` row per source."""
+    params = {f"p{i}": payload for i, payload in enumerate(payloads.values())}
+    text = " UNION ALL ".join(
+        _branch_sql(source, param) for source, param in zip(payloads, params)
+    )
+    return spark.sql(text, args=params)
+
+
+def _pick_insight(r) -> Insight:
+    """Render one collected ``(source, n, pick)`` row through the shared
+    formatter; raises on an empty or malformed pick (C1/C3)."""
+    source, n = r["source"], r["n"]
+    if n == 0:
+        raise EmptyBatchError(f"{source}: empty batch")
+    pick = json.loads(r["pick"]) if r["pick"] is not None else None
+    if source == "coingecko":
+        # to_json drops NULL fields: present=false ⇒ no bitcoin row ⇒
+        # the direct path's first() returned None
+        pick = {"usd": pick.get("usd")} if pick.get("present") else None
+    elif pick is not None:
+        # restore fields to_json dropped as NULL so the shared formatter
+        # sees the same keys the direct path would
+        for k in _PICK_KEYS[source]:
+            pick.setdefault(k, None)
+    return Insight(
+        source=source,
+        n_rows=n,
+        headline=_render_headline(source, n, pick),
+        agent="primary",
+    )
+
+
+def batch_insights(spark, payloads: dict[str, str]) -> dict[str, Insight]:
+    """Agent 1 over a WHOLE catalog tick: ``{source: payload}`` → one
+    insight per source, from ONE Spark statement.
+
+    Every source's normalize branch (:data:`sources.normalize.SQL`) and
+    pick aggregate become one branch of a ``UNION ALL``, its payload a
+    named parameter, so the tick costs one analysis, one job and a few
+    py4j calls however many sources it polls. The shared formatter
+    renders headlines driver-side from the collected picks. Semantics
+    match per-source :func:`snapshot_insights` + the C3 dispatcher
+    (same formatter, same empty-batch and malformed-pick degrades), and
+    a failure stays with its own source (C2-C5):
+
+    * an unknown source has no branch: empty batch → fallback (N12);
+    * a malformed value in a pick is ``try_cast`` to NULL, which the
+      formatter refuses → that source's fallback;
+    * if the combined statement still raises (e.g. ``timestamp_millis``
+      overflow on a huge quake ``time``), each source's branch reruns
+      alone with the same text, and only the failing one falls back.
+    """
+    out: dict[str, Insight] = {}
+    healthy = {}
+    for source, payload in payloads.items():
+        if source in norm.SQL:
+            healthy[source] = payload
+        else:
+            out[source] = fallback_insight(source, f"{source}: empty batch")
+    if not healthy:
+        return out
+    try:
+        rows = _picks(spark, healthy).collect()
+    except Exception:  # noqa: BLE001 — isolate the failing source(s)
+        rows = []
+        for source, payload in healthy.items():
+            try:
+                rows += _picks(spark, {source: payload}).collect()
+            except Exception as exc:  # noqa: BLE001 — C3 per source
+                out[source] = fallback_insight(source, str(exc))
+    for r in rows:
+        try:
+            out[r["source"]] = _pick_insight(r)
+        except Exception as exc:  # noqa: BLE001 — C3: degrade per source
+            out[r["source"]] = fallback_insight(r["source"], str(exc))
+    return out
 
 
 def fallback_insight(source: str, reason: str) -> Insight:

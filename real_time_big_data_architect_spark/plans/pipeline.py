@@ -19,10 +19,8 @@ import json
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 
 from real_time_big_data_architect_spark.plans import agents
-from real_time_big_data_architect_spark.sources import normalize as norm
 from real_time_big_data_architect_spark.sources.http_poll import (
     HTTP_POLL_AVAILABLE,
     MAX_POLL_ROWS_PER_BATCH,
@@ -33,20 +31,6 @@ from real_time_big_data_architect_spark.sources.registry import SOURCES
 STATUS_SCHEMA = (
     "tick long, source string, n_rows long, headline string, agent string"
 )
-
-def payload_relation(spark: SparkSession, payload: str) -> DataFrame:
-    """One-row ``payload string`` relation built JVM-SIDE (range+lit →
-    a codegen'd scan). ``createDataFrame`` would embed a Python-RDD
-    scan instead, and every action on such a plan would start a Python
-    task — per source, per tick.
-
-    The range has ONE slice: its output is then a single partition, so
-    a global aggregate over the normalized payload (the agents' per-
-    source pick) plans no Exchange and runs as one job with one task.
-    ``spark.range(1)`` takes the default parallelism in slices, and AQE
-    ran the resulting Exchange as two jobs per source."""
-    return spark.range(0, 1, 1, 1).select(F.lit(payload).alias("payload"))
-
 
 def _status_row(tick: int, insight: agents.Insight) -> Row:
     """One status record: the tick id plus the agent's insight, in
@@ -103,7 +87,8 @@ def process_tick(
     tick's status row (``STATUS_SCHEMA``).
 
     The poll source emits one row per tick; normalize + agents run on
-    it just like the reference's script body runs per refresh.
+    it just like the reference's script body runs per refresh, as the
+    one-source case of the all-sources tick (one statement).
     """
     rows = _bounded_rows(batch_df, ["payload", "error"])
     if not rows:
@@ -113,8 +98,9 @@ def process_tick(
         if error is not None or payload is None:
             insight = agents.commentary(None, source_key, fetch_error=error or "no payload")
         else:
-            tidy = norm.normalize(payload_relation(spark, payload), source_key)
-            insight = agents.commentary(tidy, source_key)
+            insight = agents.batch_insights(spark, {source_key: payload})[
+                source_key
+            ]
     return _status_row(tick, insight)
 
 
@@ -196,20 +182,17 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     append_status = _status_appender(spark, status_table)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
         rows = _bounded_rows(batch_df, ["source", "payload", "error"])
         # Split the tick: fetch failures degrade immediately (C4, no
-        # Spark work), healthy payloads normalize into per-source tidy
-        # frames whose insights are computed by agents.batch_insights
-        # as ONE CONCURRENT WAVE of per-source aggregates (one action,
-        # one job, one task per source on driver threads) — the
-        # 10-source tick pays one wave's scheduling latency instead of
-        # serial jobs per source (LATENCY.md "Live tick"). A
-        # per-source failure still degrades only its own row (C2-C5):
-        # batch_insights dispatches each source's pick through the
-        # shared C3 formatter/fallback.
+        # Spark work); every healthy payload goes to
+        # agents.batch_insights, which normalizes and picks ALL of them
+        # in one parameterized UNION ALL statement — one analysis and
+        # one job per tick, whatever the source count (LATENCY.md "Live
+        # tick"). A per-source failure still degrades only its own row
+        # (C2-C5): try_cast picks, the shared C3 formatter, and a
+        # per-source rerun when the combined statement raises.
         status_parts = []
-        tidies = {}
+        payloads = {}
         for r in rows:
             if r.error is not None or r.payload is None:
                 insight = agents.commentary(
@@ -217,19 +200,9 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
                 )
                 status_parts.append(_status_row(batch_id, insight))
             else:
-                # a zero-arg factory: batch_insights builds the tidy
-                # plan inside the branch's own worker thread, so the
-                # ten sources' plan construction overlaps with their
-                # analysis instead of serializing up front
-                def _tidy(payload=r.payload, source=r.source) -> DataFrame:
-                    return norm.normalize(
-                        payload_relation(sp, payload), source
-                    )
-
-                tidies[r.source] = _tidy
-        if tidies:
-            for insight in agents.batch_insights(tidies).values():
-                status_parts.append(_status_row(batch_id, insight))
+                payloads[r.source] = r.payload
+        insights = agents.batch_insights(batch_df.sparkSession, payloads)
+        status_parts += [_status_row(batch_id, i) for i in insights.values()]
         if status_parts:
             append_status(status_parts)
 

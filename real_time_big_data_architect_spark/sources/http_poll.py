@@ -339,11 +339,7 @@ def http_poll_all_snapshot(spark, sf_dir: str):  # noqa: ARG001
     from the same JSON files with DuckDB's independent parser.
     ``sf_dir`` is unused: the input is the captured payload catalog.
     """
-    from pyspark.sql import functions as F
-
-    from real_time_big_data_architect_spark.sources.normalize import (
-        normalize,
-    )
+    from real_time_big_data_architect_spark.sources.normalize import sql_over
     from real_time_big_data_architect_spark.sources.registry import SOURCES
 
     register_http_poll(spark)
@@ -360,28 +356,16 @@ def http_poll_all_snapshot(spark, sf_dir: str):  # noqa: ARG001
     )
     # one normalize branch per catalog entry over the same snapshot
     # frame — a plan-level loop over the fixed 10-entry catalog
-    # (bounded by the catalog, not the data), unioned into one result.
-    # Branches are CONSTRUCTED on a small driver thread pool (guide
-    # §2.6 applied to plan building): each normalize branch is ~a dozen
-    # py4j round-trips, and ten of them serially were the single
-    # largest phase of this query (profiled 1.2-1.4 s of pure driver
-    # plan construction vs 0.9 s poll + 0.7 s execution). Construction
-    # is pure JVM object building — thread-safe, order preserved by
-    # pool.map. Measured 1.38 s → 1.09 s end-to-end at sf0.1.
-    def _branch(key: str):
-        tidy = normalize(
-            raw.filter(F.col("source") == key).select("payload"), key
-        )
-        return tidy.agg(F.count(F.lit(1)).alias("n_rows")).select(
-            F.lit(key).alias("source"), "n_rows"
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        parts = list(pool.map(_branch, list(SOURCES)))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # (bounded by the catalog, not the data), unioned into ONE
+    # statement: a branch is a few lines of SQL text, so the whole
+    # query is built by a single spark.sql call
+    text = " UNION ALL ".join(
+        f"SELECT '{key}' AS source, count(1) AS n_rows FROM ("
+        + sql_over(key, f"(SELECT payload FROM {{raw}} WHERE source = '{key}')")
+        + ")"
+        for key in SOURCES
+    )
+    return spark.sql(text, raw=raw)
 
 
 def stream_poll_all_tick(spark, sf_dir: str):  # noqa: ARG001

@@ -1,11 +1,13 @@
 """Normalization: raw JSON payload → tidy typed DataFrame.
 
 The Spark-first re-expression of ``normalize_to_df`` (app.py:84-189,
-SURVEY §2.2): each branch is a ``from_json`` + explode/select pipeline
-over a DataFrame holding the raw payload string in a ``payload`` column
-— fully declarative, so the same pipelines run identically in batch
-(unit tests on captured payloads) and inside ``foreachBatch`` on the
-live poll stream.
+SURVEY §2.2): each branch is ONE SQL text (:data:`SQL`) over a relation
+``{src}`` holding the raw payload string in a ``payload`` column — a
+``from_json`` parse plus explode/select clauses, fully declarative, so
+the same text runs identically in batch (unit tests on captured
+payloads), inside ``foreachBatch`` on the live poll stream, and as a
+branch of the live tick's single agents statement
+(:func:`plans.agents.batch_insights`).
 
 Branch map (reference → here):
   N1  null guard            → empty DF with the branch schema
@@ -16,7 +18,7 @@ Branch map (reference → here):
   N6  spacex                → scalar projection
   N7  github_events         → array head-slice (limit 30) + dotted paths
   N8  nws_alerts            → explode + projection
-  N9  fx_rates              → map explode + concat_ws scalar carry-down
+  N9  fx_rates              → map explode + concat scalar carry-down
   N10 iss_now               → struct projection, strings kept as strings
   N11 binance               → flat projection
   N12 unknown key           → empty DF
@@ -25,7 +27,6 @@ Branch map (reference → here):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from real_time_big_data_architect_spark.sources import schemas as S
@@ -33,152 +34,121 @@ from real_time_big_data_architect_spark.sources import schemas as S
 GITHUB_CLIENT_CAP = 30  # raw[:30], app.py:144
 
 
-def _parsed(df: DataFrame, schema) -> DataFrame:
-    """Parse + drop unparseable payloads: ``from_json`` yields NULL for
-    a null or non-JSON payload (an HTML error page from a 200, a
-    truncated body), and without this filter the SCALAR-projection
-    branches emitted one all-NULL phantom row the dashboards then
-    "reported" (r10 review finding — explode branches were immune only
-    because exploding NULL yields no rows). The N1 contract is the
+def _sql(source: str, select: str, explode: str = "") -> str:
+    """One branch's text: parse ``payload`` with the source's explicit
+    schema, apply the ``LATERAL VIEW`` explodes, project ``select``.
+
+    ``WHERE p IS NOT NULL`` drops unparseable payloads: ``from_json``
+    yields NULL for a null or non-JSON payload (an HTML error page from
+    a 200, a truncated body), and without the filter the SCALAR-
+    projection branches emitted one all-NULL phantom row the dashboards
+    then "reported" (r10 review finding — explode branches were immune
+    only because exploding NULL yields no rows). The N1 contract is the
     same for every branch: unparseable → ZERO rows."""
-    return df.select(F.from_json("payload", schema).alias("p")).filter(
-        F.col("p").isNotNull()
-    )
-
-
-def normalize_openaq(df: DataFrame) -> DataFrame:
-    """results[] × measurements[] → rows; city carried down (N2)."""
+    schema = S.PAYLOAD_SCHEMAS[source].simpleString()
     return (
-        _parsed(df, S.OPENAQ)
-        .select(F.explode("p.results").alias("r"))
-        .select(F.col("r.city").alias("city"), F.explode("r.measurements").alias("m"))
-        .select(
-            "city",
-            F.col("m.parameter").alias("parameter"),
-            F.col("m.value").alias("value"),
-            F.col("m.unit").alias("unit"),
-            F.col("m.lastUpdated").alias("updated"),
-        )
+        f"SELECT {select}"
+        f" FROM (SELECT from_json(payload, '{schema}') AS p FROM {{src}})"
+        f" {explode} WHERE p IS NOT NULL"
     )
 
 
-def normalize_open_meteo(df: DataFrame) -> DataFrame:
-    """single nested struct → 1-row projection (N3)."""
-    return _parsed(df, S.OPEN_METEO).select(
-        F.col("p.current.temperature_2m").alias("temperature_2m"),
-        F.col("p.current.wind_speed_10m").alias("wind_speed_10m"),
-        F.col("p.current.time").alias("time"),
-    )
-
-
-def normalize_coingecko(df: DataFrame) -> DataFrame:
-    """map→rows pivot: asset keys become rows (N4)."""
-    return (
-        _parsed(df, S.COINGECKO)
-        .select(F.explode("p").alias("asset", "v"))
-        .select("asset", F.col("v.usd").alias("usd"))
-    )
-
-
-def normalize_usgs_quakes(df: DataFrame) -> DataFrame:
-    """explode features[]; epoch-ms → 'yyyy-MM-dd HH:mm:ss' string (N5)."""
-    return (
-        _parsed(df, S.USGS_QUAKES)
-        .select(F.explode("p.features").alias("f"))
-        .select(
-            F.date_format(
-                F.timestamp_millis(F.col("f.properties.time")), "yyyy-MM-dd HH:mm:ss"
-            ).alias("time"),
-            F.col("f.properties.mag").alias("mag"),
-            F.col("f.properties.place").alias("place"),
-            F.col("f.properties.type").alias("type"),
-        )
-    )
-
-
-def normalize_spacex(df: DataFrame) -> DataFrame:
-    """top-level scalar projection (N6)."""
-    return _parsed(df, S.SPACEX).select(
-        F.col("p.name").alias("name"),
-        F.col("p.date_utc").alias("date_utc"),
-        F.col("p.success").alias("success"),
-        F.col("p.flight_number").alias("flight_number"),
-    )
-
-
-def normalize_github_events(df: DataFrame) -> DataFrame:
-    """array head-slice (first 30) + nested projection (N7)."""
-    return (
-        _parsed(df, S.GITHUB_EVENTS)
-        .select(F.explode(F.slice("p", 1, GITHUB_CLIENT_CAP)).alias("ev"))
-        .select(
-            F.col("ev.type").alias("type"),
-            F.col("ev.repo.name").alias("repo"),
-            F.col("ev.actor.login").alias("actor"),
-            F.col("ev.created_at").alias("created_at"),
-        )
-    )
-
-
-def normalize_nws_alerts(df: DataFrame) -> DataFrame:
-    """explode features[], project properties.* (N8)."""
-    return (
-        _parsed(df, S.NWS_ALERTS)
-        .select(F.explode("p.features").alias("f"))
-        .select(
-            F.col("f.properties.event").alias("event"),
-            F.col("f.properties.areaDesc").alias("area"),
-            F.col("f.properties.severity").alias("severity"),
-            F.col("f.properties.sent").alias("sent"),
-        )
-    )
-
-
-def normalize_fx_rates(df: DataFrame) -> DataFrame:
-    """map→rows + 'base/key' concat carrying scalars to every row (N9)."""
-    return (
-        _parsed(df, S.FX_RATES)
-        .select("p.base", "p.date", F.explode("p.rates").alias("ccy", "rate"))
-        .select(
-            # F.concat, not concat_ws: a payload missing 'base' must
-            # surface as a NULL pair, not silently render as the bare
-            # currency code (concat_ws skips NULL fields AND the
-            # separator — r10 review finding)
-            F.concat(F.col("base"), F.lit("/"), F.col("ccy")).alias("pair"),
-            "rate",
-            "date",
-        )
-    )
-
-
-def normalize_iss_now(df: DataFrame) -> DataFrame:
-    """struct projection; lat/long stay strings — cast at analytics (N10)."""
-    return _parsed(df, S.ISS_NOW).select(
-        F.col("p.iss_position.latitude").alias("latitude"),
-        F.col("p.iss_position.longitude").alias("longitude"),
-        F.col("p.timestamp").alias("timestamp"),
-    )
-
-
-def normalize_binance(df: DataFrame) -> DataFrame:
-    """flat dict → 1-row table; price stays a string (N11)."""
-    return _parsed(df, S.BINANCE).select(
-        F.col("p.symbol").alias("symbol"), F.col("p.price").alias("price")
-    )
-
-
-_BRANCHES = {
-    "openaq": normalize_openaq,
-    "open_meteo": normalize_open_meteo,
-    "coingecko": normalize_coingecko,
-    "usgs_quakes": normalize_usgs_quakes,
-    "spacex": normalize_spacex,
-    "github_events": normalize_github_events,
-    "nws_alerts": normalize_nws_alerts,
-    "fx_rates": normalize_fx_rates,
-    "iss_now": normalize_iss_now,
-    "binance": normalize_binance,
+#: every branch's only definition; ``{src}`` is the payload relation
+SQL: dict[str, str] = {
+    # N2: results[] × measurements[] → rows; city carried down
+    "openaq": _sql(
+        "openaq",
+        "r.city AS city, m.parameter AS parameter, m.value AS value,"
+        " m.unit AS unit, m.lastUpdated AS updated",
+        "LATERAL VIEW explode(p.results) AS r"
+        " LATERAL VIEW explode(r.measurements) AS m",
+    ),
+    # N3: single nested struct → 1-row projection
+    "open_meteo": _sql(
+        "open_meteo",
+        "p.current.temperature_2m AS temperature_2m,"
+        " p.current.wind_speed_10m AS wind_speed_10m, p.current.time AS time",
+    ),
+    # N4: map→rows pivot, asset keys become rows
+    "coingecko": _sql(
+        "coingecko", "asset, v.usd AS usd", "LATERAL VIEW explode(p) AS asset, v"
+    ),
+    # N5: explode features[]; epoch-ms → 'yyyy-MM-dd HH:mm:ss' string
+    "usgs_quakes": _sql(
+        "usgs_quakes",
+        "date_format(timestamp_millis(f.properties.time),"
+        " 'yyyy-MM-dd HH:mm:ss') AS time, f.properties.mag AS mag,"
+        " f.properties.place AS place, f.properties.type AS type",
+        "LATERAL VIEW explode(p.features) AS f",
+    ),
+    # N6: top-level scalar projection
+    "spacex": _sql(
+        "spacex",
+        "p.name AS name, p.date_utc AS date_utc, p.success AS success,"
+        " p.flight_number AS flight_number",
+    ),
+    # N7: array head-slice (first 30) + nested projection
+    "github_events": _sql(
+        "github_events",
+        "ev.type AS type, ev.repo.name AS repo, ev.actor.login AS actor,"
+        " ev.created_at AS created_at",
+        f"LATERAL VIEW explode(slice(p, 1, {GITHUB_CLIENT_CAP})) AS ev",
+    ),
+    # N8: explode features[], project properties.*
+    "nws_alerts": _sql(
+        "nws_alerts",
+        "f.properties.event AS event, f.properties.areaDesc AS area,"
+        " f.properties.severity AS severity, f.properties.sent AS sent",
+        "LATERAL VIEW explode(p.features) AS f",
+    ),
+    # N9: map→rows + 'base/key' concat carrying scalars to every row.
+    # concat, not concat_ws: a payload missing 'base' must surface as a
+    # NULL pair, not silently render as the bare currency code
+    # (concat_ws skips NULL fields AND the separator — r10 review
+    # finding)
+    "fx_rates": _sql(
+        "fx_rates",
+        "concat(p.base, '/', ccy) AS pair, rate, p.date AS date",
+        "LATERAL VIEW explode(p.rates) AS ccy, rate",
+    ),
+    # N10: struct projection; lat/long stay strings — cast at analytics
+    "iss_now": _sql(
+        "iss_now",
+        "p.iss_position.latitude AS latitude,"
+        " p.iss_position.longitude AS longitude, p.timestamp AS timestamp",
+    ),
+    # N11: flat dict → 1-row table; price stays a string
+    "binance": _sql("binance", "p.symbol AS symbol, p.price AS price"),
 }
+
+
+def sql_over(source: str, relation: str) -> str:
+    """``source``'s branch text over ``relation`` (SQL text of a
+    relation with a ``payload`` column), for embedding in a larger
+    statement."""
+    return SQL[source].format(src=relation)
+
+
+def _runner(source: str):
+    def run(df: DataFrame) -> DataFrame:
+        return normalize(df, source)
+
+    run.__name__ = run.__qualname__ = f"normalize_{source}"
+    run.__doc__ = f"Run the ``{source}`` branch of :data:`SQL` over ``df``."
+    return run
+
+
+normalize_openaq = _runner("openaq")
+normalize_open_meteo = _runner("open_meteo")
+normalize_coingecko = _runner("coingecko")
+normalize_usgs_quakes = _runner("usgs_quakes")
+normalize_spacex = _runner("spacex")
+normalize_github_events = _runner("github_events")
+normalize_nws_alerts = _runner("nws_alerts")
+normalize_fx_rates = _runner("fx_rates")
+normalize_iss_now = _runner("iss_now")
+normalize_binance = _runner("binance")
+
 
 def empty_result(spark, source: str) -> DataFrame:
     """N1/N12: null payload or unknown source → empty table with the
@@ -187,16 +157,14 @@ def empty_result(spark, source: str) -> DataFrame:
     projection (r10 review finding: the former hand-maintained DDL
     table had no parity enforcement; tidy schemas are documented in
     FIXTURES.md §B)."""
-    branch = _BRANCHES.get(source)
-    if branch is None:
+    if source not in SQL:
         return spark.createDataFrame([], T.StructType([]))
-    return branch(spark.createDataFrame([], "payload string"))
+    return normalize(spark.createDataFrame([], "payload string"), source)
 
 
 def normalize(df: DataFrame, source: str) -> DataFrame:
     """Dispatch one payload DataFrame (column ``payload`` string) through
     its source branch; unknown source → empty DF (N12)."""
-    branch = _BRANCHES.get(source)
-    if branch is None:
+    if source not in SQL:
         return empty_result(df.sparkSession, source)
-    return branch(df)
+    return df.sparkSession.sql(SQL[source], src=df)

@@ -215,20 +215,93 @@ def test_poll_all_read_refuses_more_sources_than_the_row_cap(spark):
 
 @pytest.mark.parametrize("source", ["binance", "usgs_quakes", "github_events"])
 def test_agents_branch_plans_no_exchange(spark, source):
-    """A batch_insights branch (normalize(payload_relation) → global
-    agg) runs on the one-slice payload relation's single partition: no
-    Exchange, so one job with one task per source per tick."""
-    from pyspark.sql import functions as F
-
-    from real_time_big_data_architect_spark.sources import normalize as norm
+    """One source's batch_insights branch (its normalize SQL over the
+    one-slice payload relation → global agg) runs on a single
+    partition: no Exchange, so one task per source when a branch reruns
+    alone."""
+    from real_time_big_data_architect_spark.plans import agents
 
     with open(os.path.join(_PAYLOAD_DIR, f"{source}.json")) as f:
         payload = f.read()
-    tidy = norm.normalize(pipeline.payload_relation(spark, payload), source)
-    branch = tidy.agg(F.count(F.lit(1)).alias("n"))
-    assert branch.collect()[0].n >= 1
+    branch = agents._picks(spark, {source: payload})
+    rows = branch.collect()
+    assert [r.source for r in rows] == [source]
+    assert rows[0].n >= 1
     plan = branch._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+def test_batch_insights_runs_a_catalog_tick_in_one_job(spark):
+    """The agents step of a 10-source tick is ONE Spark statement: one
+    job, and its plan has no Exchange (each branch reads its payload
+    from a one-slice range, so its global aggregate needs no shuffle)."""
+    from real_time_big_data_architect_spark.plans import agents
+    from real_time_big_data_architect_spark.sources.registry import SOURCES
+
+    payloads = {}
+    for source in SOURCES:
+        with open(os.path.join(_PAYLOAD_DIR, f"{source}.json")) as f:
+            payloads[source] = f.read()
+    sc = spark.sparkContext
+    group = "batch_insights_one_job"
+    sc.setJobGroup(group, "agents tick")
+    try:
+        out = agents.batch_insights(spark, payloads)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(out) == set(SOURCES)
+    assert all(i.agent == "primary" and i.n_rows >= 1 for i in out.values())
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = agents._picks(spark, payloads)._jdf.queryExecution().executedPlan()
+    assert "Exchange" not in plan.toString(), plan.toString()
+
+
+#: tidy row counts of the fixture catalog (tests/payloads)
+_FIXTURE_ROWS = {
+    "openaq": 3, "open_meteo": 1, "coingecko": 3, "usgs_quakes": 3,
+    "spacex": 1, "github_events": 30, "nws_alerts": 2, "fx_rates": 3,
+    "iss_now": 1, "binance": 1,
+}
+
+
+@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+def test_malformed_values_degrade_only_their_own_sources(spark, tmp_path):
+    """Under ANSI mode one malformed value degrades only its own source,
+    although the whole tick is one statement: an ISS latitude of "n/a"
+    (cast to NULL, refused by the formatter) and a quake time that
+    overflows timestamp_millis (fails the combined statement, so each
+    branch reruns alone) give 2 fallback rows; the other 8 sources keep
+    their primary rows and counts."""
+    import shutil
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    payload_dir = tmp_path / "payloads"
+    shutil.copytree(_PAYLOAD_DIR, payload_dir)
+    iss = json.loads((payload_dir / "iss_now.json").read_text())
+    iss["iss_position"]["latitude"] = "n/a"
+    (payload_dir / "iss_now.json").write_text(json.dumps(iss))
+    quakes = json.loads((payload_dir / "usgs_quakes.json").read_text())
+    quakes["features"][0]["properties"]["time"] = 9223372036854775000
+    (payload_dir / "usgs_quakes.json").write_text(json.dumps(quakes))
+    table = "status_all_malformed"
+    q = pipeline.run_poll_all_pipeline(
+        spark,
+        payload_dir=str(payload_dir),
+        status_table=table,
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    rows = {r.source: r for r in spark.table(table).collect()}
+    spark.sql(f"DROP TABLE {table}")
+    assert set(rows) == set(_FIXTURE_ROWS)
+    bad = {"iss_now", "usgs_quakes"}
+    for source, n in _FIXTURE_ROWS.items():
+        r = rows[source]
+        if source in bad:
+            assert (r.agent, r.n_rows) == ("fallback", 0), r
+        else:
+            assert (r.agent, r.n_rows) == ("primary", n), r
 
 
 @pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
