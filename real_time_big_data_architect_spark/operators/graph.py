@@ -545,9 +545,10 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("rn") == 1)
                 .select(F.col("node").alias("user_id"), F.col("label").alias("new_label"))
             )
+            # labels holds exactly the node set, one row per node, so
+            # a left join keeps every node and its previous label
             labels = (
-                nodes.join(labels, "user_id")
-                .join(best, "user_id", "left")
+                labels.join(best, "user_id", "left")
                 .select(
                     "user_id",
                     F.coalesce("new_label", "label").alias("label"),

@@ -12,6 +12,15 @@ local[32] test harness and (by the same knobs) a real cluster:
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
 - Python workers fork from :mod:`worker_daemon`, which stops every task
   re-reading ``pyspark.zip``'s directory (~0.2 s of worker CPU each).
+- Streaming checkpoints (offset/commit WALs, file-source seen-files log,
+  HDFS-backed state-store deltas) go through Spark's FileSystem-based
+  checkpoint manager. Without the native Hadoop library every
+  ``RawLocalFileSystem.setPermission`` forks a ``chmod``; the default
+  FileContext-based manager pays several per atomic write (~46 ms per
+  ``createAtomic`` against ~13 ms, on tmpfs and disk alike; per-batch
+  state ``commitTimeMs`` ~380-460 → ~30 ms on 4 cores). Writes stay
+  write-then-rename with ``.crc`` checksums, and a second create of the
+  same batch file still fails.
 """
 
 from __future__ import annotations
@@ -68,6 +77,11 @@ def get_spark(
         .config(
             "spark.python.daemon.module",
             "real_time_big_data_architect_spark.worker_daemon",
+        )
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     )
     for k, v in (extra_conf or {}).items():

@@ -106,14 +106,18 @@ def stream_scratch_dir(prefix: str) -> str:
 
     The declared drain queries are transient: availableNow → memory
     sink, scratch deleted before the function returns, so the durable-
-    fsync guarantees of a disk checkpoint buy nothing — yet the
-    HDFS-backed state store and the offset/commit WAL pay a
-    write+rename per store instance per batch, which on a slow-metadata
-    disk dominates small-batch drains (measured ~5-8 s of summed
-    commitTimeMs per batch on the stream-stream joins at sf0.1).
-    Scratch therefore defaults to ``/dev/shm`` (tmpfs) when present
-    with at least ``SHM_SCRATCH_MIN_FREE_BYTES`` free, and to the
-    default temp dir otherwise.
+    fsync guarantees of a disk checkpoint buy nothing. Scratch
+    therefore defaults to ``/dev/shm`` (tmpfs) when present with at
+    least ``SHM_SCRATCH_MIN_FREE_BYTES`` free, and to the default temp
+    dir otherwise.
+
+    The mount is not what made checkpoint writes slow. Without the
+    native Hadoop library every ``setPermission`` forks a ``chmod``,
+    and Spark's default FileContext-based checkpoint manager paid
+    several per atomic write: ~46 ms per ``createAtomic`` on tmpfs and
+    on disk alike, ~550-770 forks per stateful drain. ``get_spark``
+    pins the FileSystem-based manager (~13 ms on either mount, ~150-190
+    forks per drain; 4 cores).
 
     Parameterised, not pinned: ``SPARK_GRAFT_STREAM_SCRATCH`` overrides
     the root (a production LONG-LIVED stream must point its checkpoint
@@ -175,10 +179,9 @@ def _run_to_memory(
 
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    # explicit RAM-backed checkpoint (see stream_scratch_dir): the
-    # engine's implicit temporary checkpoint lands in java.io.tmpdir,
-    # which is a disk mount here — per-batch state/WAL commits there
-    # dominated the small-batch drains
+    # explicit scratch checkpoint (see stream_scratch_dir), deleted
+    # with the drain; its per-batch WAL and state commits cost what
+    # the session's checkpoint manager makes them cost, on any mount
     ckpt = stream_scratch_dir("drain_ckpt_")
     try:
         with _stream_shuffle_conf(spark, partitions):

@@ -283,6 +283,70 @@ def test_load_table_cache_invalidates_on_rewrite(spark, tmp_path):
     assert df2.count() == 2
 
 
+def test_events_schema_probe_is_cached_until_a_file_changes(spark, tmp_path):
+    """probe_events_schema infers the footer schema with a Spark job;
+    a second probe of the same unchanged directory runs none, and
+    rewriting a file (ts as long nanos, then as TIMESTAMP) misses the
+    cache and re-probes."""
+    import pyarrow as pa
+
+    from real_time_big_data_architect_spark.tables import probe_events_schema
+
+    def write_events(ts):
+        pq.write_table(
+            pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": ts}),
+            str(tmp_path / "events0.parquet"),
+        )
+
+    def probe_jobs(group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "events schema probe")
+        try:
+            schema = probe_events_schema(spark, str(tmp_path), "events*.parquet")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return schema, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    write_events(pa.array([10**18, 2 * 10**18], pa.int64()))
+    first, jobs = probe_jobs("schema_probe_first")
+    assert first["ts"].dataType.typeName() == "long" and jobs >= 1
+    again, jobs = probe_jobs("schema_probe_again")
+    assert again == first and jobs == 0
+    write_events(pa.array([10**15, 2 * 10**15], pa.timestamp("us", tz="UTC")))
+    rewritten, jobs = probe_jobs("schema_probe_rewritten")
+    assert rewritten["ts"].dataType.typeName() == "timestamp" and jobs >= 1
+
+
+def test_streams_checkpoint_through_the_filesystem_manager(spark, tmp_path):
+    """get_spark pins the FileSystem-based checkpoint manager (the
+    FileContext-based default forks several ``chmod``s per atomic write
+    when the native Hadoop library is absent). Atomic writes keep their
+    ``.crc`` checksum, and a batch file stays write-once: a second
+    non-overwriting create fails on close and keeps the first bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf
+    )
+    assert manager.getClass().getSimpleName() == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+    batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = manager.createAtomic(batch, False)
+    out.write(bytearray(b"first"))
+    out.close()
+    assert {"0", ".0.crc"} <= set(os.listdir(tmp_path))
+    out = manager.createAtomic(batch, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="FAILED_RENAME_PATH"):
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
 def test_streaming_progress_capture_records_batches(spark, sf_small):
     """r7 regression guard for the latency artifact's data source:
     a streaming drain must append its StreamingQueryProgress events
