@@ -18,7 +18,7 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -127,7 +127,7 @@ def probe_events_schema(spark: SparkSession, path: str, glob: str = "*.parquet")
 
 #: (abs dir, glob) → (session, ``_dir_sig``, StructType) for
 #: ``probe_events_schema``
-_SCHEMA_CACHE: dict[tuple[str, str], tuple[SparkSession, tuple | None, object]] = {}
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[SparkSession, tuple | None, StructType]] = {}
 
 
 def _dir_sig(path: str) -> tuple | None:
