@@ -83,34 +83,6 @@ HEADLINE = [
 #: machine noise — the artifact, not just the diagnostics, must say so)
 CONTENTION_LOADAVG = 2.0
 
-#: fixed-work calibration probe (r11 verdict item 3): the host has
-#: multi-hour UNIFORM-DRIFT episodes — loadavg clean, single-thread
-#: execution 1.3-1.5x slower — invisible to every loadavg gate above
-#: and responsible for two rounds of bench-forensics (r10 r11). The
-#: probe times a pure-Python integer loop (single-thread, cache-small,
-#: allocation-free: immune to Spark self-load on a 32-core box, only
-#: host-level clock/steal drift moves it) and records the ratio vs the
-#: constant below. host_speed_factor ≈ 1.0 = trustworthy numbers;
-#: ≥ ~1.2 = drift episode, read the composite through the factor.
-CALIBRATION_N = 5_000_000
-#: min-of-6 seconds for the loop on this host, idle (loadavg 0.6),
-#: recorded r12 — the denominator every future run self-normalizes by
-CALIBRATION_BASELINE_S = 0.3626
-
-
-def _calibration_probe(reps: int = 3) -> float:
-    """Min-of-``reps`` wall seconds for the fixed-work loop; min (not
-    mean) so scheduler blips don't inflate the drift signal — a uniform
-    episode slows EVERY rep, which is exactly what survives the min."""
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(CALIBRATION_N):
-            acc = (acc + i * i) & 0xFFFFFFFF
-        best = min(best, time.perf_counter() - t0)
-    return best
-
 #: per-pass loadavg ceiling: the bench's own 32-thread passes push the
 #: 1-minute loadavg to ~2.5-3.2 (measured), so a pass-start reading an
 #: order above that is EXTERNAL contention, not self-load
@@ -166,9 +138,6 @@ def main() -> None:
     # pass start, an order above self-load, and THAT is what the
     # marker must catch. Per-pass values stay recorded as diagnostics.
     loadavg_start = round(os.getloadavg()[0], 1)
-    # calibration at session start, BEFORE Spark spins up (the cleanest
-    # single-thread window); repeated at each pass boundary below
-    speed_probes = [round(_calibration_probe() / CALIBRATION_BASELINE_S, 3)]
     spark = get_spark("bench")
     qs = workload.build_queries()
 
@@ -198,9 +167,6 @@ def main() -> None:
     idle_retries = [3]  # bounded sleep-and-retry budget, shared across passes
     for _pass in range(3):
         pass_loadavg.append(round(_await_pass_window(idle_retries), 1))
-        speed_probes.append(
-            round(_calibration_probe() / CALIBRATION_BASELINE_S, 3)
-        )
         # drop the previous pass's dead persisted relations: each
         # qs[name]() call builds NEW DataFrames, so earlier passes'
         # persist()s are unreachable yet still occupy storage memory —
@@ -282,29 +248,7 @@ def main() -> None:
         "pass_totals": pass_totals,
         "loadavg_start": loadavg_start,
         "loadavg_per_pass": pass_loadavg,
-        # fixed-work single-thread drift signal (r11 verdict item 3):
-        # ratio of the calibration loop vs its idle-host constant,
-        # probed at session start + each pass boundary. 1.0 = the host
-        # ran at recorded speed; a uniform-drift episode (loadavg-clean
-        # 1.3-1.5x slowdowns, two rounds of forensics) now self-reports
-        "host_speed_factor": round(
-            sorted(speed_probes)[len(speed_probes) // 2], 3
-        ),
-        "host_speed_per_probe": speed_probes,
-        # drift-normalized composite (r12 verdict item 1): total scaled
-        # by the median calibration factor, so cross-round comparisons
-        # have a number that already discounts uniform host slowdown.
-        # DIAGNOSTIC ONLY — "value" above stays the raw wall clock.
-        "value_drift_normalized": round(
-            total / max(sorted(speed_probes)[len(speed_probes) // 2], 1.0), 4
-        ),
     }
-    if sorted(speed_probes)[len(speed_probes) // 2] >= 1.2:
-        # drift-episode taint marker, same contract as "contended":
-        # numbers were recorded on a slowed host, not a slowed engine.
-        # Boundary INCLUSIVE (r12 verdict item 1: the r12 recording sat
-        # at exactly 1.2 and dodged the marker)
-        out["drifted"] = True
     if idle_retries[0] < 3:
         # the retry machinery acted: record how many bounded idle-waits
         # were spent so the reader can tell a quieted machine (clean

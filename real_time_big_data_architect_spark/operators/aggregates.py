@@ -186,16 +186,15 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (finer than rollup/cube): totals by
     (returnflag, linestatus), by returnflag alone, and grand total —
     but NOT by linestatus alone."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(SUM(CAST(l_quantity AS DECIMAL(30,4))) AS DOUBLE) AS sum_qty,
                COUNT(*) AS n_rows
-        FROM lineitem_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

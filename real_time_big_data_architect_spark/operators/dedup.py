@@ -631,12 +631,6 @@ MAX_CC_ROUNDS = 16  # backstop only; alternating star contraction
 _CC_SUM_STRIDE = 4294967311
 
 
-#: alternations the most recent star_contract call ran before the
-#: checksum fixpoint (diagnostic read by the scale probes: the ×N
-#: wall growth attribution needs rounds vs per-round cost separated)
-LAST_CC_ROUNDS = 0
-
-
 def star_contract(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Connected components of an undirected pair relation via
     ALTERNATING LARGE-STAR / SMALL-STAR CONTRACTION (Kiveris et al.,
@@ -681,13 +675,10 @@ def star_contract(spark: SparkSession, pairs: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         ).first()
 
-    global LAST_CC_ROUNDS
-    LAST_CC_ROUNDS = 0
     first = _checksum(E)
     prev_sum, n_edges = first.s, first.n
     with _loop_shuffle_conf(spark, 2 * n_edges):
-        for _round in range(MAX_CC_ROUNDS):
-            LAST_CC_ROUNDS = _round + 1
+        for _ in range(MAX_CC_ROUNDS):
             # large-star: for every node u, m = min(Γ(u) ∪ {u}); each
             # LARGER neighbor v re-points to m. Output stays canonical
             # (v > u ≥ m). No distinct here — small-star's window min

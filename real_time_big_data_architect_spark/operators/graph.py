@@ -644,14 +644,15 @@ def recursive_cte_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     anyway, and the recurrence itself is token-identical in both
     engines.
     """
-    # register just the one view the SQL reads (the full-catalog
-    # register_views would fail on partial dirs like the scale probes')
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     edges = _edges(spark, sf_dir).localCheckpoint(eager=True)
     # a DataFrame argument binds through a uuid-named temp view that
     # spark.sql drops once the query is analyzed: nothing is left in
     # the session's catalog
-    return spark.sql(_REACH_RECURSIVE_SQL_OVER_VIEW, edges=edges)
+    return spark.sql(
+        _REACH_RECURSIVE_SQL_OVER_VIEW,
+        events=load_table(spark, sf_dir, "events"),
+        edges=edges,
+    )
 
 
 def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,11 +734,12 @@ _REACH_RECURSIVE_SQL = f"""
 #: ``spark.sql``) instead of an inline edges CTE that UnionLoop would
 #: re-derive from events every hop (see recursive_cte_reachability
 #: docstring). The seed member and the walk recurrence are
-#: token-identical to _REACH_RECURSIVE_SQL.
+#: token-identical to _REACH_RECURSIVE_SQL, apart from reading both
+#: relations as bound ``{events}``/``{edges}`` arguments.
 _REACH_RECURSIVE_SQL_OVER_VIEW = f"""
     WITH RECURSIVE
     walk(user_id, dist) AS (
-        SELECT DISTINCT user_id, 0 FROM events
+        SELECT DISTINCT user_id, 0 FROM {{events}}
         WHERE user_id % {BFS_SEED_MOD} = 0
         UNION ALL
         SELECT DISTINCT e.dst, w2.dist + 1

@@ -446,16 +446,16 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans the two scalar subqueries once each (ReusedSubquery), then
     broadcasts the 1-row results into the scan's filter.
     """
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("part_sq")
     return spark.sql(
         """
         SELECT p_partkey, p_name, p_retailprice
-        FROM part_sq
+        FROM {part}
         WHERE CAST(p_retailprice AS DECIMAL(18,2))
-              * (SELECT COUNT(*) FROM part_sq)
+              * (SELECT COUNT(*) FROM {part})
               > (SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2)))
-                 FROM part_sq)
-        """
+                 FROM {part})
+        """,
+        part=load_table(spark, sf_dir, "part"),
     )
 
 
@@ -464,19 +464,19 @@ def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     EUROPE nations. Catalyst rewrites the IN to a semi join and the
     scalar to a broadcast 1-row filter — subqueries are plan sugar,
     not per-row re-execution."""
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_sq")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_sq")
-    load_table(spark, sf_dir, "region").createOrReplaceTempView("region_sq")
     return spark.sql(
         """
         SELECT s_suppkey, s_name, s_nationkey
-        FROM supplier_sq
+        FROM {supplier}
         WHERE s_nationkey IN (
-            SELECT n_nationkey FROM nation_sq
-            WHERE n_regionkey = (SELECT r_regionkey FROM region_sq
+            SELECT n_nationkey FROM {nation}
+            WHERE n_regionkey = (SELECT r_regionkey FROM {region}
                                  WHERE r_name = 'EUROPE')
         )
-        """
+        """,
+        supplier=load_table(spark, sf_dir, "supplier"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
     )
 
 

@@ -1,14 +1,14 @@
 """Primary/fallback analytics agents (reference C1-C6, app.py:192-247).
 
-Agent 1 (:func:`snapshot_insights`) validates the batch and computes the
-reference's per-source insight queries with DataFrame ops; it raises on
-an empty table exactly like ``agent_1`` (app.py:194-195);
-:func:`batch_insights` is the same agent over a whole catalog tick as
-one Spark statement. Agent 2 (:func:`fallback_insight`) is the degrade
-path. :func:`commentary` is the try/except dispatcher
-(``agentic_commentary``, app.py:242-247), usable directly inside
-``foreachBatch`` — each micro-batch gets a status record instead of a
-crashed stream.
+Agent 1 (:func:`batch_insights`) computes the reference's per-source
+insight queries for every payload of a tick as one Spark statement; a
+source whose tidy table is empty raises :class:`EmptyBatchError`
+exactly like ``agent_1`` (app.py:194-195). Agent 2
+(:func:`fallback_insight`) is the degrade path. ``batch_insights`` is
+also the try/except dispatcher (``agentic_commentary``,
+app.py:242-247): a source whose primary insight fails gets the
+fallback, so each micro-batch gets a status record per source instead
+of a crashed stream.
 """
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ import json
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from real_time_big_data_architect_spark.sources import normalize as norm
 
@@ -36,10 +35,9 @@ class Insight:
 
 def _render_headline(source: str, n: int, row) -> str:
     """Shared headline formatter: ``row`` is the per-source pick (a
-    mapping or None), ``n`` the tidy row count. Raises exactly like the
-    direct path on malformed picks (e.g. a NULL spot price under a
-    numeric format) so the C3 dispatcher degrades identically whether
-    the pick came from ``first()`` or from the batched union agg."""
+    mapping or None), ``n`` the tidy row count. Raises on malformed
+    picks (e.g. a NULL spot price under a numeric format), which the
+    C3 dispatcher in :func:`batch_insights` turns into a fallback."""
     if source == "coingecko":
         return f"BTC ${row['usd']:,.0f}" if row else "BTC not present"
     if source == "usgs_quakes":
@@ -55,56 +53,13 @@ def _render_headline(source: str, n: int, row) -> str:
     return f"{n} records"
 
 
-def snapshot_insights(df: DataFrame, source: str) -> Insight:
-    """Agent 1: count + one per-source headline insight (app.py:192-228).
-
-    Every branch is a Spark expression over the tidy table — the
-    reference's pandas lookups (A3-A10) re-expressed:
-    count → ``df.count()``; bitcoin spot → filter+first (A4/A5);
-    strongest/latest → ``orderBy desc limit 1`` (A7).
-    """
-    n = df.count()
-    if n == 0:
-        raise EmptyBatchError(f"{source}: empty batch")
-
-    if source == "coingecko":
-        row = (
-            df.filter(F.col("asset") == "bitcoin")
-            .select(F.col("usd").cast("double").alias("usd"))
-            .first()
-        )
-    elif source == "usgs_quakes":
-        row = (
-            df.na.drop(subset=["mag"])
-            .orderBy(F.col("time").desc())
-            .limit(1)
-            .first()
-        )
-    elif source == "fx_rates":
-        row = df.orderBy(F.col("rate").desc()).limit(1).first()
-    elif source == "open_meteo":
-        row = df.first()
-    elif source == "iss_now":
-        row = df.select(
-            F.col("latitude").cast("double").alias("lat"),
-            F.col("longitude").cast("double").alias("lon"),
-        ).first()
-    elif source == "binance":
-        row = df.select(F.col("price").cast("double").alias("p")).first()
-    else:
-        row = None
-    headline = _render_headline(source, n, row)
-    return Insight(source=source, n_rows=n, headline=headline, agent="primary")
-
-
-#: Spark-side pick expression per source for the batched union path —
-#: the SAME A4/A5/A7 lookups as :func:`snapshot_insights`, re-shaped as
-#: single aggregates so a whole catalog tick is ONE Spark job:
-#: filter+first → max(CASE WHEN ...), orderBy-desc-limit-1 → max_by
-#: (ties arbitrary in both forms). NULL-ordering parity: max_by skips
-#: NULL ordering keys exactly like na.drop / the desc-nulls-last first
-#: row that the direct path would format (a NULL pick field then raises
-#: the same TypeError under the shared formatter → same C3 fallback).
+#: Spark-side pick expression per source — the reference's A4/A5/A7
+#: lookups (app.py:192-228) as single aggregates, so a whole catalog
+#: tick is ONE Spark job: filter+first → max(CASE WHEN ...),
+#: orderBy-desc-limit-1 → max_by (ties arbitrary). max_by
+#: skips NULL ordering keys, so a quake with a NULL mag is never the
+#: latest one (A6); a NULL pick field raises a TypeError under the
+#: shared formatter → C3 fallback.
 #: Value casts are ``try_cast``: under ANSI mode a malformed value
 #: ("n/a") must become NULL — and so this source's fallback — instead
 #: of failing the whole tick's statement.
@@ -129,8 +84,8 @@ _PICK_EXPRS: dict[str, str] = {
     # ONE first() over a struct, not one per field: independent
     # first(col) aggregates may each take a DIFFERENT arbitrary row on
     # a multi-row frame, mixing fields across rows; the struct pick
-    # takes all fields from the same row, like the direct path's
-    # df.first()
+    # takes all fields from the same row, like the reference's
+    # df.iloc[0]
     "open_meteo": (
         "first(named_struct('temperature_2m', temperature_2m,"
         " 'wind_speed_10m', wind_speed_10m))"
@@ -187,11 +142,11 @@ def _pick_insight(r) -> Insight:
     pick = json.loads(r["pick"]) if r["pick"] is not None else None
     if source == "coingecko":
         # to_json drops NULL fields: present=false ⇒ no bitcoin row ⇒
-        # the direct path's first() returned None
+        # no pick
         pick = {"usd": pick.get("usd")} if pick.get("present") else None
     elif pick is not None:
         # restore fields to_json dropped as NULL so the shared formatter
-        # sees the same keys the direct path would
+        # sees every key of the pick
         for k in _PICK_KEYS[source]:
             pick.setdefault(k, None)
     return Insight(
@@ -210,11 +165,13 @@ def batch_insights(spark, payloads: dict[str, str]) -> dict[str, Insight]:
     pick aggregate become one branch of a ``UNION ALL``, its payload a
     named parameter, so the tick costs one analysis, one job and a few
     py4j calls however many sources it polls. The shared formatter
-    renders headlines driver-side from the collected picks. Semantics
-    match per-source :func:`snapshot_insights` + the C3 dispatcher
-    (same formatter, same empty-batch and malformed-pick degrades), and
-    a failure stays with its own source (C2-C5):
+    renders headlines driver-side from the collected picks. It is also
+    the C3 dispatcher: a source whose primary insight fails gets
+    :func:`fallback_insight`, and a failure stays with its own source
+    (C2-C5):
 
+    * an empty tidy table raises :class:`EmptyBatchError` (C1) →
+      fallback (C5);
     * an unknown source has no branch: empty batch → fallback (N12);
     * a malformed value in a pick is ``try_cast`` to NULL, which the
       formatter refuses → that source's fallback;
@@ -257,16 +214,3 @@ def fallback_insight(source: str, reason: str) -> Insight:
         agent="fallback",
     )
 
-
-def commentary(df: DataFrame | None, source: str, fetch_error: str | None = None) -> Insight:
-    """try/except dispatcher (app.py:242-247): primary, else fallback.
-
-    Also absorbs the fetch-error degrade (C4) and empty-result degrade
-    (C5): a fetch error or empty/None table routes to Agent 2.
-    """
-    if fetch_error is not None or df is None:
-        return fallback_insight(source, fetch_error or "no payload")
-    try:
-        return snapshot_insights(df, source)
-    except Exception as exc:  # C3: any primary failure → fallback
-        return fallback_insight(source, str(exc))

@@ -2,15 +2,16 @@
 
 ``app.py`` per tick: fetch (app.py:67-81) → normalize_to_df
 (app.py:84-189) → render + agent commentary (app.py:192-247). Here the
-same loop is: http_poll streaming source → ``foreachBatch`` →
-normalize → :mod:`plans.agents` commentary → status-table append.
+same loop is: http_poll_all streaming source → ``foreachBatch`` →
+normalize → :mod:`plans.agents` insights → status-table append.
 Errors degrade exactly like the reference: a failed fetch or empty
 normalization produces a fallback status row, never a crashed stream
 (C2-C5).
 
-``run_poll_pipeline`` is the live entry point (60 s processing-time
-trigger by default, app.py:37); tests drive it with ``availableNow``
-against a loopback HTTP server — no external network.
+``run_poll_all_pipeline`` is the live entry point (60 s processing-time
+trigger by default, app.py:37); the reference's one-source loop is
+``run_poll_all_pipeline(spark, sources=[key])``. Tests drive it with
+``availableNow`` against a loopback HTTP server — no external network.
 """
 
 from __future__ import annotations
@@ -24,9 +25,7 @@ from real_time_big_data_architect_spark.plans import agents
 from real_time_big_data_architect_spark.sources.http_poll import (
     HTTP_POLL_AVAILABLE,
     MAX_POLL_ROWS_PER_BATCH,
-    HttpPollDataSource,
 )
-from real_time_big_data_architect_spark.sources.registry import SOURCES
 
 STATUS_SCHEMA = (
     "tick long, source string, n_rows long, headline string, agent string"
@@ -81,67 +80,30 @@ def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
 
 
 def process_tick(
-    spark: SparkSession, batch_df: DataFrame, source_key: str, tick: int
-) -> Row:
-    """One micro-batch: raw (fetch_ts, payload, error) rows → the
-    tick's status row (``STATUS_SCHEMA``).
+    spark: SparkSession, batch_df: DataFrame, tick: int
+) -> list[Row]:
+    """One micro-batch: raw ``(source, payload, error)`` rows → the
+    tick's status rows (``STATUS_SCHEMA``), one per source.
 
-    The poll source emits one row per tick; normalize + agents run on
-    it just like the reference's script body runs per refresh, as the
-    one-source case of the all-sources tick (one statement).
+    Fetch failures degrade immediately (C4, no Spark work); every
+    healthy payload goes to :func:`agents.batch_insights`, which
+    normalizes and picks ALL of them in one parameterized UNION ALL
+    statement — one analysis and one job per tick, whatever the source
+    count (LATENCY.md "Live tick"). A per-source failure still degrades
+    only its own row (C2-C5): try_cast picks, the shared C3 formatter,
+    and a per-source rerun when the combined statement raises.
     """
-    rows = _bounded_rows(batch_df, ["payload", "error"])
-    if not rows:
-        insight = agents.fallback_insight(source_key, "no poll row")
-    else:
-        payload, error = rows[-1].payload, rows[-1].error
-        if error is not None or payload is None:
-            insight = agents.commentary(None, source_key, fetch_error=error or "no payload")
+    rows = _bounded_rows(batch_df, ["source", "payload", "error"])
+    status = []
+    payloads = {}
+    for r in rows:
+        if r.error is not None or r.payload is None:
+            insight = agents.fallback_insight(r.source, r.error or "no payload")
+            status.append(_status_row(tick, insight))
         else:
-            insight = agents.batch_insights(spark, {source_key: payload})[
-                source_key
-            ]
-    return _status_row(tick, insight)
-
-
-def run_poll_pipeline(
-    spark: SparkSession,
-    source_key: str,
-    *,
-    url_override: str | None = None,
-    status_table: str = "poll_status",
-    available_now: bool = False,
-    processing_time: str = "60 seconds",
-):
-    """Start the live loop for one catalog source; returns the query.
-
-    Status rows append to the managed table ``status_table``, one per
-    tick — the engine's analog of the reference's rendered page.
-    """
-    if not HTTP_POLL_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("Python DataSource API unavailable")
-    spec = SOURCES[source_key]
-    spark.dataSource.register(HttpPollDataSource)
-    stream = (
-        spark.readStream.format("http_poll")
-        .option("url", url_override or spec.url)
-        .option("headers", "{}")
-        .option("timeout", str(spec.timeout_s))
-        .load()
-    )
-    append_status = _status_appender(spark, status_table)
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_status(
-            [process_tick(batch_df.sparkSession, batch_df, source_key, batch_id)]
-        )
-
-    writer = stream.writeStream.foreachBatch(on_batch)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+            payloads[r.source] = r.payload
+    insights = agents.batch_insights(spark, payloads)
+    return status + [_status_row(tick, i) for i in insights.values()]
 
 
 def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
@@ -182,29 +144,9 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     append_status = _status_appender(spark, status_table)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = _bounded_rows(batch_df, ["source", "payload", "error"])
-        # Split the tick: fetch failures degrade immediately (C4, no
-        # Spark work); every healthy payload goes to
-        # agents.batch_insights, which normalizes and picks ALL of them
-        # in one parameterized UNION ALL statement — one analysis and
-        # one job per tick, whatever the source count (LATENCY.md "Live
-        # tick"). A per-source failure still degrades only its own row
-        # (C2-C5): try_cast picks, the shared C3 formatter, and a
-        # per-source rerun when the combined statement raises.
-        status_parts = []
-        payloads = {}
-        for r in rows:
-            if r.error is not None or r.payload is None:
-                insight = agents.commentary(
-                    None, r.source, fetch_error=r.error or "no payload"
-                )
-                status_parts.append(_status_row(batch_id, insight))
-            else:
-                payloads[r.source] = r.payload
-        insights = agents.batch_insights(batch_df.sparkSession, payloads)
-        status_parts += [_status_row(batch_id, i) for i in insights.values()]
-        if status_parts:
-            append_status(status_parts)
+        status = process_tick(batch_df.sparkSession, batch_df, batch_id)
+        if status:
+            append_status(status)
 
     writer = stream.writeStream.foreachBatch(on_batch)
     if checkpoint_location:

@@ -6,19 +6,16 @@ Two layers:
   stdlib urllib (no ``requests`` dependency): 15 s timeout, optional
   header injection (S2), HTTP-error surfaced, JSON-parse with plain-text
   fallback, returns ``(payload_text, error)``.
-- :class:`HttpPollDataSource` — a Spark 4 Python streaming DataSource
-  (``SimpleDataSourceStreamReader``): each micro-batch polls the URL
-  once and emits one row ``(fetch_ts, payload, error)``; downstream,
-  ``sources.normalize`` turns the payload into the tidy table. Gated
-  behind an import-try — the API is young and never exercised by the
-  driver (tests use fixture payloads, no network; SURVEY §7 M4).
+- :class:`HttpPollAllDataSource` — a Spark 4 Python DataSource
+  (``format("http_poll_all")``): each micro-batch (or snapshot) polls
+  every planned source and emits one row ``(fetch_ts, source, payload,
+  error)`` per source; downstream, ``sources.normalize`` turns each
+  payload into its tidy table. A one-source poll is the same source
+  with ``sources=<key>``. Gated behind an import-try — the API is young
+  and never exercised by the driver (tests use fixture payloads, no
+  network; SURVEY §7 M4).
 
-Live wiring (not run in tests)::
-
-    spark.dataSource.register(HttpPollDataSource)
-    raw = (spark.readStream.format("http_poll")
-           .option("url", SOURCES["binance"].url).load())
-    tidy = foreachBatch(lambda df, _: normalize(df, "binance") ...)
+Live wiring: :func:`plans.pipeline.run_poll_all_pipeline`.
 """
 
 from __future__ import annotations
@@ -84,14 +81,15 @@ def fetch(
 
 
 def _poll_once(options: dict) -> tuple[float, str | None, str | None]:
-    """One tick: (fetch_ts, payload, error).
+    """One poll of one plan entry (:func:`_multi_poll_options`):
+    (fetch_ts, payload, error).
 
     Three addressing modes, checked in order:
     - ``payload_path`` — OFFLINE: read a captured payload file (tests /
       the driver's no-network sandbox; SURVEY §5.2);
     - ``source`` — catalog key: URL + conditional headers from
       ``registry.SOURCES`` (app.py:40-52);
-    - ``url`` (+ optional JSON ``headers``) — direct.
+    - ``url`` — direct (a ``urls`` override of the catalog URL).
     Failures surface in the ``error`` column, never as exceptions —
     the reference's degrade-don't-crash contract (C2).
     """
@@ -108,11 +106,7 @@ def _poll_once(options: dict) -> tuple[float, str | None, str | None]:
         spec = SOURCES[options["source"]]
         payload, error = fetch(spec.url, dict(spec.headers or {}))
         return float(time.time()), payload, error
-    payload, error = fetch(
-        options.get("url", ""),
-        json.loads(options.get("headers", "{}")),
-        int(options.get("timeout", "15")),
-    )
+    payload, error = fetch(options["url"])
     return float(time.time()), payload, error
 
 
@@ -131,54 +125,6 @@ try:
         InputPartition,
         SimpleDataSourceStreamReader,
     )
-
-    class _HttpPollStreamReader(SimpleDataSourceStreamReader):
-        """One poll per micro-batch; offset = poll counter.
-
-        A simple reader runs in Spark's driver-side source runner: the
-        poll happens while Spark plans the batch (``latestOffset``) and
-        the batch itself is a JVM scan of the prefetched row, with no
-        Python task."""
-
-        def __init__(self, options: dict[str, str]) -> None:
-            self._options = dict(options)
-
-        def initialOffset(self) -> dict:
-            return {"poll": 0}
-
-        def read(self, start: dict) -> tuple[list, dict]:
-            return [_poll_once(self._options)], {"poll": start["poll"] + 1}
-
-        def readBetweenOffsets(self, start: dict, end: dict) -> list:  # noqa: ARG002
-            # a replayed batch re-polls: a poll cannot be re-read
-            return [_poll_once(self._options)]
-
-    class _HttpPollBatchReader(DataSourceReader):
-        """One-shot snapshot: a single poll as a 1-row batch frame."""
-
-        def __init__(self, options: dict[str, str]) -> None:
-            self._options = dict(options)
-
-        def read(self, partition):  # noqa: ARG002 - one logical partition
-            yield _poll_once(self._options)
-
-    class HttpPollDataSource(DataSource):
-        """``spark.read[Stream].format("http_poll")`` — snapshot or
-        tick loop from one source definition (see :func:`_poll_once`
-        for the addressing options)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "http_poll"
-
-        def schema(self) -> str:
-            return "fetch_ts double, payload string, error string"
-
-        def reader(self, schema):
-            return _HttpPollBatchReader(self.options)
-
-        def simpleStreamReader(self, schema):
-            return _HttpPollStreamReader(self.options)
 
     def _multi_poll_options(options: dict) -> list[tuple[str, dict]]:
         """Resolve the per-source polling plan for the all-sources
@@ -220,7 +166,7 @@ try:
                     (key, {"payload_path": f"{options['payload_dir']}/{key}.json"})
                 )
             elif key in overrides:
-                plan.append((key, {"url": overrides[key], "headers": "{}"}))
+                plan.append((key, {"url": overrides[key]}))
             else:
                 plan.append((key, {"source": key}))
         return plan
@@ -287,14 +233,11 @@ try:
             return _HttpMultiPollStreamReader(self.options)
 
     def register_http_poll(spark) -> None:
-        """Make ``format("http_poll")`` / ``format("http_poll_all")``
-        resolvable in this session."""
-        spark.dataSource.register(HttpPollDataSource)
+        """Make ``format("http_poll_all")`` resolvable in this session."""
         spark.dataSource.register(HttpPollAllDataSource)
 
     HTTP_POLL_AVAILABLE = True
 except ImportError:  # pragma: no cover - Python DataSource API unavailable
-    HttpPollDataSource = None  # type: ignore[assignment]
     HttpPollAllDataSource = None  # type: ignore[assignment]
     HTTP_POLL_AVAILABLE = False
 
@@ -310,20 +253,21 @@ _PAYLOAD_DIR = f"{_REPO_ROOT}/tests/payloads"
 
 def http_poll_usgs_snapshot(spark, sf_dir: str):  # noqa: ARG001
     """The reference's full S1→N5 path as one oracle-checked query:
-    http_poll datasource (offline fixture payload) → declarative
-    normalize. The oracle parses the SAME JSON file with DuckDB's
-    independent reader — two engines, two JSON parsers, one answer.
-    ``sf_dir`` is unused: the input is the captured payload, the
-    contract the reference actually consumes."""
+    http_poll_all datasource polling the one ``usgs_quakes`` source
+    (offline fixture payload) → declarative normalize. The oracle parses
+    the SAME JSON file with DuckDB's independent reader — two engines,
+    two JSON parsers, one answer. ``sf_dir`` is unused: the input is
+    the captured payload, the contract the reference actually
+    consumes."""
     from real_time_big_data_architect_spark.sources.normalize import (
         normalize_usgs_quakes,
     )
 
     register_http_poll(spark)
     raw = (
-        spark.read.format("http_poll")
-        .option("source", "usgs_quakes")
-        .option("payload_path", _USGS_FIXTURE)
+        spark.read.format("http_poll_all")
+        .option("payload_dir", _PAYLOAD_DIR)
+        .option("sources", "usgs_quakes")
         .load()
     )
     return normalize_usgs_quakes(raw.select("payload"))

@@ -18,7 +18,6 @@ class SourceSpec:
     description: str
     headers: dict[str, str] = field(default_factory=dict)
     row_cap: int | None = None
-    timeout_s: int = 15  # fetch timeout (app.py:67)
 
 
 SOURCES: dict[str, SourceSpec] = {

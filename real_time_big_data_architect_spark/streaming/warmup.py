@@ -45,12 +45,12 @@ def warm_streaming_subsystems(
 
     def _pyds():
         # Python DataSource worker pool: one 1-row batch READ through
-        # the http_poll source and one tiny WRITE through jsonl_sink.
+        # the http_poll_all source and one tiny WRITE through jsonl_sink.
         import shutil
         import tempfile
 
         from real_time_big_data_architect_spark.sources.http_poll import (
-            _USGS_FIXTURE,
+            _PAYLOAD_DIR,
             register_http_poll,
         )
         from real_time_big_data_architect_spark.sources.lake import (
@@ -60,9 +60,9 @@ def warm_streaming_subsystems(
 
         register_http_poll(spark)
         (
-            spark.read.format("http_poll")
-            .option("source", "usgs_quakes")
-            .option("payload_path", _USGS_FIXTURE)
+            spark.read.format("http_poll_all")
+            .option("payload_dir", _PAYLOAD_DIR)
+            .option("sources", "usgs_quakes")
             .load()
             .count()
         )

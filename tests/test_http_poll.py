@@ -108,10 +108,11 @@ def test_custom_headers_passed(server):
 )
 def test_http_poll_datasource_end_to_end(spark, server):
     """Register the source, run one micro-batch, read the sink."""
-    spark.dataSource.register(http_poll.HttpPollDataSource)
+    http_poll.register_http_poll(spark)
     q = (
-        spark.readStream.format("http_poll")
-        .option("url", f"{server}/json")
+        spark.readStream.format("http_poll_all")
+        .option("sources", "binance")
+        .option("urls", json.dumps({"binance": f"{server}/json"}))
         .load()
         .writeStream.format("memory")
         .queryName("http_poll_sink")

@@ -44,10 +44,10 @@ def server():
 
 @pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_happy_path(spark, server):
-    q = pipeline.run_poll_pipeline(
+    q = pipeline.run_poll_all_pipeline(
         spark,
-        "binance",
-        url_override=f"{server}/binance",
+        sources=["binance"],
+        url_overrides={"binance": f"{server}/binance"},
         status_table="status_ok",
         available_now=True,
     )
@@ -62,10 +62,10 @@ def test_live_loop_happy_path(spark, server):
 
 @pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_degrades_on_http_error(spark, server):
-    q = pipeline.run_poll_pipeline(
+    q = pipeline.run_poll_all_pipeline(
         spark,
-        "binance",
-        url_override=f"{server}/fail",
+        sources=["binance"],
+        url_overrides={"binance": f"{server}/fail"},
         status_table="status_fail",
         available_now=True,
     )
@@ -181,16 +181,17 @@ def test_oversized_poll_batch_fails_loudly(spark):
     must be refused with a clear error (the poll readers bound the
     transfer itself where rows are created; see the test below)."""
     big = spark.range(pipeline.MAX_POLL_ROWS_PER_BATCH + 5).selectExpr(
-        "'{}' AS payload", "CAST(NULL AS STRING) AS error"
+        "'binance' AS source", "'{}' AS payload", "CAST(NULL AS STRING) AS error"
     )
     with pytest.raises(RuntimeError, match="exceeded .* rows"):
-        pipeline.process_tick(spark, big, "binance", tick=0)
+        pipeline.process_tick(spark, big, tick=0)
     # at the cap: processes normally (one status row)
     ok = spark.range(1).selectExpr(
+        "'binance' AS source",
         "'{\"symbol\": \"BTCUSDT\", \"price\": \"1.0\"}' AS payload",
         "CAST(NULL AS STRING) AS error",
     )
-    out = [pipeline.process_tick(spark, ok, "binance", tick=0)]
+    out = pipeline.process_tick(spark, ok, tick=0)
     assert len(out) == 1 and out[0].source == "binance"
 
 

@@ -1,4 +1,4 @@
-"""Spark 4 Python DataSource (http_poll): batch + streaming over the
+"""Spark 4 Python DataSource (http_poll_all): batch + streaming over the
 captured payload fixtures, with the normalize layer stacked on top."""
 
 from __future__ import annotations
@@ -14,12 +14,12 @@ from real_time_big_data_architect_spark.sources.http_poll import (
 PAYLOADS = os.path.join(os.path.dirname(__file__), "payloads")
 
 
-def _read(spark, source):
+def _read(spark, source, payload_dir=PAYLOADS):
     register_http_poll(spark)
     return (
-        spark.read.format("http_poll")
-        .option("source", source)
-        .option("payload_path", os.path.join(PAYLOADS, f"{source}.json"))
+        spark.read.format("http_poll_all")
+        .option("payload_dir", payload_dir)
+        .option("sources", source)
         .load()
     )
 
@@ -41,13 +41,7 @@ def test_normalize_stacks_on_datasource(spark):
 
 
 def test_missing_payload_file_degrades_to_error_row(spark):
-    register_http_poll(spark)
-    rows = (
-        spark.read.format("http_poll")
-        .option("payload_path", "/nonexistent/x.json")
-        .load()
-        .collect()
-    )
+    rows = _read(spark, "x", payload_dir="/nonexistent").collect()
     assert len(rows) == 1
     assert rows[0].payload is None and rows[0].error
 
@@ -57,8 +51,9 @@ def test_streaming_ticks_produce_one_row_per_batch(spark, tmp_path):
     Run with a fast trigger, wait for >=2 ticks, stop."""
     register_http_poll(spark)
     stream = (
-        spark.readStream.format("http_poll")
-        .option("payload_path", os.path.join(PAYLOADS, "iss_now.json"))
+        spark.readStream.format("http_poll_all")
+        .option("payload_dir", PAYLOADS)
+        .option("sources", "iss_now")
         .load()
     )
     q = (

@@ -497,3 +497,33 @@ def test_stage_cdc_feed_with_an_empty_parity(spark, sf_small, tmp_path, monkeypa
     want = mutations._cdc_feed(v1, mutations._cdc_v2(v1)).count()
     assert want > 0
     assert spark.read.parquet(f"{feed_dir}/feed0.parquet").count() == want
+
+
+@pytest.mark.parametrize(
+    "module, query",
+    [
+        ("aggregates", "grouping_sets_agg"),
+        ("joins", "subquery_scalar"),
+        ("joins", "subquery_in"),
+        ("graph", "recursive_cte_reachability"),
+    ],
+)
+def test_sql_surface_queries_leave_no_temp_view(spark, sf_small, module, query):
+    """SQL-surface queries bind their relations as ``spark.sql``
+    arguments, whose uuid-named views Spark drops after analysis: the
+    session's temp-view set is the same before and after the query. A
+    fresh session, so no earlier test's views can hide a leak."""
+    import importlib
+
+    ops = importlib.import_module(
+        f"real_time_big_data_architect_spark.operators.{module}"
+    )
+    session = spark.newSession()
+
+    def temp_views():
+        return {t.name for t in session.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    rows = ops.QUERIES[query](session, sf_small).collect()
+    assert rows
+    assert temp_views() == before

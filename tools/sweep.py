@@ -52,14 +52,6 @@ def main() -> int:
             prev = rec.get("queries", {})
     except (FileNotFoundError, json.JSONDecodeError):
         pass
-    # fixed-work single-thread drift probe (r11 verdict item 3) — see
-    # bench.py: the ratio vs the idle-host constant self-reports the
-    # uniform-drift episodes that loadavg can't see
-    from bench import CALIBRATION_BASELINE_S, _calibration_probe
-
-    speed_probes = [
-        round(_calibration_probe() / CALIBRATION_BASELINE_S, 3)
-    ]
     spark = get_spark("sweep")
     loadavg0 = round(os.getloadavg()[0], 1)  # contention marker
     # session warm-up (uncounted): one flagship execution pays the
@@ -102,12 +94,6 @@ def main() -> int:
             fails.append((name, str(exc)[:200]))
             print(f"FAIL {name}: {str(exc)[:150]}", flush=True)
     total = time.perf_counter() - t0
-    # re-probe after the sweep: an episode that started mid-run shows
-    # as start≈1.0 / end≥1.2 — exactly the half-tainted case that cost
-    # a hand-forensics day in r11
-    speed_probes.append(
-        round(_calibration_probe() / CALIBRATION_BASELINE_S, 3)
-    )
     vs_prev = {
         n: round(timings[n] / prev[n], 2)
         for n in timings
@@ -182,8 +168,6 @@ def main() -> int:
         "session_warmup_sec": warmup_sec,
         "session_warmup_detail": warmup_detail,
         "queries": timings,
-        "host_speed_factor": max(speed_probes),
-        "host_speed_per_probe": speed_probes,
         "drift_vs_prev_median": drift,
         "drift_corrected_total_sec": (
             round(total / drift, 1) if drift else None
