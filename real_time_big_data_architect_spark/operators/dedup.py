@@ -39,7 +39,7 @@ import random
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
@@ -50,13 +50,13 @@ N_MINHASHES = 64
 N_BANDS = 8  # 8 rows per band
 SHINGLE_K = 5  # 5-word shingles
 
-#: hot-bucket guard: an LSH bucket larger than this switches from the
-#: exact n² self-join to sorted neighbor-chaining (see
-#: :func:`dedup_minhash_lsh`). 64² = 4096 pairs is the per-bucket join
-#: ceiling on the exact path.
+#: hot-bucket guard of every blocked near-dup operator: a bucket (or
+#: block) larger than this switches from exact all-pairs to sorted
+#: neighbor-chaining (see :func:`banded_pairs`). 64² = 4096 pairs is
+#: the per-bucket ceiling on the exact path.
 LSH_BUCKET_CAP = 64
-#: neighbors each doc pairs with on the chained path — bounds an
-#: n-doc degenerate bucket at n·4 candidates instead of n²/2
+#: neighbors each member pairs with on the chained path — bounds an
+#: n-member degenerate bucket at n·4 candidates instead of n²/2
 LSH_CHAIN_NEIGHBORS = 4
 
 #: the blank-doc guard's whitespace alphabet — the 6 ASCII whitespace
@@ -205,25 +205,103 @@ def _minhash_text(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def _chained_pairs_case(cap: int, k: int) -> str:
-    """Guarded pair-generation SQL over a sorted ``ids`` array: exact
-    all-pairs for buckets ≤ ``cap``, next-``k`` neighbor chains above
-    it — the hot-bucket discipline shared by the MinHash-LSH and
-    SimHash paths (single source of truth so the two cannot drift)."""
+def _chained_pairs_case(arr: str) -> str:
+    """The one hot-bucket pair CASE: over the sorted array column
+    ``arr`` (≥ 2 elements), ``struct(a, b)`` element pairs — every pair
+    up to ``LSH_BUCKET_CAP`` members, each element with its next
+    ``LSH_CHAIN_NEIGHBORS`` successors above it."""
     return f"""
-        CASE WHEN size(ids) <= {cap} THEN
-          flatten(transform(sequence(1, size(ids)-1),
-            j -> transform(slice(ids, 1, j),
-                           x -> struct(least(x, ids[j]) AS doc_a,
-                                       greatest(x, ids[j]) AS doc_b))))
+        CASE WHEN size({arr}) <= {LSH_BUCKET_CAP} THEN
+          flatten(transform(sequence(1, size({arr})-1),
+            j -> transform(slice({arr}, 1, j),
+                           x -> struct(x AS a, {arr}[j] AS b))))
         ELSE
-          flatten(transform(sequence(0, size(ids)-2),
-            i -> transform(slice(ids, i+2,
-                                 least({k},
-                                       size(ids)-1-i)),
-                           y -> struct(least(ids[i], y) AS doc_a,
-                                       greatest(ids[i], y) AS doc_b))))
+          flatten(transform(sequence(0, size({arr})-2),
+            i -> transform(slice({arr}, i+2,
+                                 least({LSH_CHAIN_NEIGHBORS},
+                                       size({arr})-1-i)),
+                           y -> struct({arr}[i] AS a, y AS b))))
         END"""
+
+
+def banded_pairs(
+    sigs: DataFrame, sig: str, bands: Column, order: Column
+) -> DataFrame:
+    """Blocked candidate pairs over a ``(doc_id, <sig>, ...)`` signature
+    relation — the pipeline shared by MinHash-LSH, SimHash and pHash.
+
+    ``bands`` is an array expression of bucket keys; docs sharing any
+    (band, bucket) are candidates. Each bucket's members are collected
+    sorted by ``order`` (which may read ``band``, ``bucket`` and the
+    signature columns) then ``doc_id``; ``_chained_pairs_case`` emits
+    every pair of a bucket up to ``LSH_BUCKET_CAP`` members and next-
+    ``LSH_CHAIN_NEIGHBORS`` chains above it. A degenerate bucket (1 M
+    boilerplate copies of one page) is the one scale-killer in banded
+    LSH; the chain bounds it at n·k candidates instead of n²/2, while
+    an ``order`` correlated with similarity keeps runs of mutual
+    near-dups adjacent and transitively connected. A hot bucket holds
+    its ids as one row (8 B/doc: a 10 M-doc cluster is an 80 MB array,
+    large but bounded). Only (band, bucket, doc_id, order) is shuffled;
+    pairs are canonicalised (doc_a < doc_b) and deduplicated BEFORE the
+    signature joins back on both sides, so the scorer runs once per
+    unique pair. Returns ``(doc_a, doc_b, sig_a, sig_b)``.
+
+    ``sigs`` is persisted once: bucketing and both join-back sides read
+    it, and without the cache each consumer re-runs the Python
+    signature kernel. The CacheManager dedupes by logical plan, so
+    repeat invocations share one entry; callers release via the session
+    ``clearCache()``.
+    """
+    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    members = F.array_sort(F.collect_list(F.struct("o", "doc_id")))
+    pairs = (
+        sigs.select("doc_id", sig, F.posexplode(bands).alias("band", "bucket"))
+        .select("doc_id", "band", "bucket", order.alias("o"))
+        .groupBy("band", "bucket")
+        .agg(F.transform(members, lambda m: m.doc_id).alias("ids"))
+        .filter(F.size("ids") >= 2)
+        .select(F.explode(F.expr(_chained_pairs_case("ids"))).alias("p"))
+        .select(
+            F.least("p.a", "p.b").alias("doc_a"), F.greatest("p.a", "p.b").alias("doc_b")
+        )
+        .distinct()
+    )
+    sig_a, sig_b = (
+        sigs.select(F.col("doc_id").alias(f"doc_{x}"), F.col(sig).alias(f"sig_{x}"))
+        for x in "ab"
+    )
+    return pairs.join(sig_a, "doc_a").join(sig_b, "doc_b").select(
+        "doc_a", "doc_b", "sig_a", "sig_b"
+    )
+
+
+def hamming_pairs(
+    sigs: DataFrame, sig: str, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """``(doc_a, doc_b, hamming)`` pairs within ``max_hamming`` bits over
+    a ``(doc_id, <sig> long, band0..band{n_bands-1})`` relation.
+
+    Recall is complete for buckets within the cap: a pair within
+    Hamming ≤ max of 64 bits agrees exactly on at least one of
+    ``n_bands`` > max disjoint bands (pigeonhole). Hot buckets chain in
+    full-signature order (signature-adjacent docs share the most bits).
+    The explicit partition count keeps AQE from coalescing the few-MB
+    signature exchange to one partition and serializing the band
+    bucketing downstream (tools/parallelcheck.py).
+    """
+    sigs = sigs.repartition(
+        sigs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
+    )
+    bands = F.array(*[F.col(f"band{b}") for b in range(n_bands)])
+    return (
+        banded_pairs(sigs, sig, bands, F.col(sig))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def _minhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,54 +336,26 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH (NS6a).
 
     Bands of 8 minhashes hash to a bucket; docs sharing any
-    (band, bucket) are candidates. One self-join on the bucket key —
-    at 100 TB this is the only shuffle, and bucket keys are 8 bytes.
-    Returns pairs with their estimated Jaccard (fraction of matching
-    minhashes), filtered at >= 0.5.
-
-    **Hot-bucket guard**: a degenerate bucket (e.g. 1 M boilerplate
-    copies of one page) would make a bucket self-join quadratic — the
-    one scale-killer in banded LSH. Pair generation is therefore a
-    single groupBy (band, bucket) collecting the sorted doc_id array,
-    with pairs emitted by an array expression that branches on bucket
-    size: buckets ≤ LSH_BUCKET_CAP emit every pair (exact, ≤ CAP²/2
-    per bucket); larger buckets emit neighbor chains sorted by an
-    out-of-band minhash (a similarity-correlated key — equal for two
-    docs with probability ≈ their Jaccard) — each doc pairs with its
-    next LSH_CHAIN_NEIGHBORS probe-order neighbors — so an n-doc
-    bucket is bounded at n·4 candidates instead of n²/2 while runs of
-    mutual near-dups sort adjacently and stay transitively connected
-    (what downstream clustering consumes). This replaces the former bucket
-    self-join with ONE shuffle of (band, bucket, doc_id) and no join
-    at all; measured ~1.0 s vs 1.15 s (unguarded join) at sf0.1. A hot
-    bucket holds its ids as one row (8 B/doc: a 10 M-doc boilerplate
-    cluster is an 80 MB array — large but bounded, vs. the 10¹³-pair
-    join it replaces). Small-bucket results are identical to the
-    unguarded plan, verified in tests and by unchanged fixture counts.
+    (band, bucket) are candidates (:func:`banded_pairs`). Returns pairs
+    with their estimated Jaccard (fraction of matching minhashes),
+    filtered at >= 0.5. Hot buckets chain in the order of one minhash
+    from OUTSIDE the bucket's own band: docs in a bucket agree on that
+    band's 8 minhashes by construction, so an out-of-band minhash is
+    the similarity-correlated sort key (equal with probability ≈
+    Jaccard) — raw doc_id order would interleave near-dup families and
+    miss pairs.
     """
-    # The signature table is read four times (bucket-size agg, both
-    # join sides, the pair re-join). persist() materializes the Arrow
-    # shingle-hash pass ONCE — the in-query analog of writing
-    # signatures to the lake, the standard first stage of every
-    # near-dup pipeline (shuffle-exchange reuse stopped covering all
-    # consumers once the hot-bucket guard added a fourth). The
-    # CacheManager dedupes by logical plan, so repeat invocations share
-    # one entry. Null signatures (blank docs) are not near-dup
-    # candidates — and concat_ws() skips NULLs, so leaving them in
-    # would funnel every blank doc into one shared md5('') bucket.
-    sigs = (
-        _minhash_frame(spark, sf_dir)
-        .filter(F.col("minhash").isNotNull())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # Null signatures (blank docs) are not near-dup candidates — and
+    # concat_ws() skips NULLs, so leaving them in would funnel every
+    # blank doc into one shared md5('') bucket.
+    sigs = _minhash_frame(spark, sf_dir).filter(F.col("minhash").isNotNull())
     rows_per_band = N_MINHASHES // N_BANDS
     # One SQL string -> one py4j round trip. The equivalent nested
     # Column construction is ~100 gateway calls and measured >1 s of
     # pure driver-side plan building per invocation at any SF.
     # Bucket id = 64-bit md5 prefix of the band's value string (band
-    # index is the salt) — same shuffle width as the former xxhash64,
-    # but DuckDB computes the identical bucket, which is what makes the
-    # pair set oracle-replayable.
+    # index is the salt): DuckDB computes the identical bucket, which is
+    # what makes the pair set oracle-replayable.
     band_exprs = ", ".join(
         "substr(md5(concat_ws(',', '{b}', {items})), 1, 16)".format(
             b=b,
@@ -316,71 +366,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for b in range(N_BANDS)
     )
-    bands = F.posexplode(F.expr(f"array({band_exprs})"))
-    # Shuffle discipline: the bucket self-join carries ONLY
-    # (band, bucket, doc_id, probe) — 32 bytes/row — not the 512-byte
-    # signature array. Pairs are deduped BEFORE signatures are re-joined
-    # and the estimator is scored once per unique pair. `probe` is one
-    # minhash from OUTSIDE the bucket's own band: docs in a bucket agree
-    # on that band's 8 minhashes by construction, so an out-of-band
-    # minhash is the similarity-correlated chain-sort key (equal with
-    # probability ≈ Jaccard) — sorting hot buckets by it keeps each
-    # near-dup family adjacent where raw doc_id order would interleave
-    # families and miss pairs.
-    buckets = sigs.select("doc_id", "minhash", bands.alias("band", "bucket")).select(
-        "doc_id",
-        "band",
-        "bucket",
-        F.expr(f"minhash[pmod((band + 1) * {rows_per_band}, {N_MINHASHES})]").alias(
-            "probe"
-        ),
-    )
-    grouped = buckets.groupBy("band", "bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("probe", "doc_id"))),
-            lambda s: s.doc_id,
-        ).alias("ids")
-    )
-    # exact pairs for small buckets, next-k neighbor chains for hot
-    # ones — one CASE expression, rows already co-located by the
-    # groupBy shuffle, so pair generation is pure map-side codegen.
-    # ids are probe-sorted (not doc_id-sorted), so canonical pair order
-    # comes from least/greatest.
-    pair_expr = F.expr(
-        _chained_pairs_case(LSH_BUCKET_CAP, LSH_CHAIN_NEIGHBORS)
-    )
-    pairs = (
-        grouped.filter(F.size("ids") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    sig_a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("minhash").alias("mh_a")
-    )
-    sig_b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("minhash").alias("mh_b")
-    )
+    probe = F.expr(f"minhash[pmod((band + 1) * {rows_per_band}, {N_MINHASHES})]")
+    matches = F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))")
     return (
-        pairs.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with(
-                            F.col("mh_a"),
-                            F.col("mh_b"),
-                            lambda x, y: (x == y).cast("int"),
-                        ),
-                        lambda v: v == 1,
-                    )
-                )
-                / F.lit(float(N_MINHASHES))
-            ).alias("est_jaccard"),
-        )
+        banded_pairs(sigs, "minhash", F.expr(f"array({band_exprs})"), probe)
+        .select("doc_a", "doc_b", (matches / N_MINHASHES).alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= 0.5)
     )
 
@@ -455,66 +445,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Blocking: any pair within Hamming ≤ 3 of 64 bits agrees exactly on
     at least one of the 4 16-bit bands (pigeonhole), so candidates come
-    from 4 band-equality self-joins — only (band_idx, band_value,
-    doc_id) is shuffled — then the exact ``bit_count(a XOR b)`` filter
-    runs per unique candidate pair.
+    from the 4 band buckets — only (band, bucket, doc_id, simhash) is
+    shuffled — then the exact ``bit_count(a XOR b)`` filter runs per
+    unique candidate pair (:func:`hamming_pairs`).
     """
-    # Repartition so the signature pass materializes once and both
-    # consumers (bucketing + signature re-join) reuse the exchange.
-    # Explicit partition count: without it AQE coalesces the few-MB
-    # signature exchange to one partition and the downstream band
-    # bucketing + pair chaining ran serial (tools/parallelcheck.py).
-    # Persisted (r13): exchange reuse alone did not stop the Python
-    # signature kernel re-planning across the three consumers —
-    # measured 1.94 → 1.72 s at sf0.1 with the cache (the
-    # media_phash_dedup fix, same lazy-internal-persist convention as
-    # the minhash signature relation; released by session clearCache())
-    sigs = _simhash_bands(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    ).persist()
-    buckets = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(SIMHASH_BANDS)])
-        ).alias("band", "bucket"),
-    )
-    # hot-bucket guard (the LSH discipline, shared _chained_pairs_case):
-    # a degenerate bucket — 1 M boilerplate copies agreeing on a band —
-    # would make a bucket self-join quadratic. Buckets ≤ cap emit exact
-    # pairs (identical to the old self-join); larger ones chain each doc
-    # to its next-k neighbors sorted by the FULL signature (signature-
-    # adjacent docs share the most bits), bounding an n-doc bucket at
-    # n·k candidates. Completeness within Hamming ≤ 3 therefore holds
-    # for buckets ≤ cap; boundedness above it is bought with recall,
-    # exactly as documented for the minhash path.
-    grouped = buckets.groupBy("band", "bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("simhash", "doc_id"))),
-            lambda st: st.doc_id,
-        ).alias("ids")
-    )
-    pairs = (
-        grouped.filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(_chained_pairs_case(LSH_BUCKET_CAP, LSH_CHAIN_NEIGHBORS))
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    sig_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"))
-    sig_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"))
-    return (
-        pairs.join(sig_a, "doc_a")
-        .join(sig_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
+    return hamming_pairs(
+        _simhash_bands(spark, sf_dir), "simhash", SIMHASH_BANDS, SIMHASH_MAX_HAMMING
     )
 
 
@@ -798,10 +734,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 LEV_BUCKET = 32
 LEV_PREFIX = 64
 LEV_MAX_DIST = 8
-#: hot-block guard: blocks above this population switch from exact
-#: all-pairs to (prefix, doc_id)-sorted neighbor chaining
-LEV_BLOCK_CAP = 64
-LEV_CHAIN_NEIGHBORS = 4
 
 
 def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -821,7 +753,7 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes, so the query is fully oracle-checked (unlike the
     hash-seeded MinHash/SimHash paths). Key cardinality bounds the
     NUMBER of blocks, not their population, so blocks over
-    LEV_BLOCK_CAP switch to sorted-neighborhood chaining (see body);
+    LSH_BUCKET_CAP switch to sorted-neighborhood chaining (see body);
     near-boundary misses are the standard blocking trade-off (the
     MinHash path has no such blind spot and runs alongside).
     """
@@ -836,8 +768,8 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-BLOCK guard: blocking bounds the NUMBER of blocks, not their
     # population — a popular (lang, len_bucket) block grows with the
     # corpus and an unguarded self-join grows with its square. Blocks
-    # ≤ LEV_BLOCK_CAP keep the exact all-pairs semantics; larger ones
-    # chain each member to its next LEV_CHAIN_NEIGHBORS in
+    # ≤ LSH_BUCKET_CAP keep the exact all-pairs semantics; larger ones
+    # chain each member to its next LSH_CHAIN_NEIGHBORS in
     # (prefix, doc_id) order — prefix-adjacent strings are exactly the
     # low-edit-distance candidates, the sorted-neighborhood method of
     # record linkage. The oracle replays BOTH branches (block counts +
@@ -846,20 +778,6 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list(F.struct("prefix", "doc_id"))).alias(
             "members"
         )
-    )
-    pair_expr = F.expr(
-        f"""
-        CASE WHEN size(members) <= {LEV_BLOCK_CAP} THEN
-          flatten(transform(sequence(1, size(members)-1),
-            j -> transform(slice(members, 1, j),
-                           x -> struct(x AS m1, members[j] AS m2))))
-        ELSE
-          flatten(transform(sequence(0, size(members)-2),
-            i -> transform(slice(members, i+2,
-                                 least({LEV_CHAIN_NEIGHBORS},
-                                       size(members)-1-i)),
-                           y -> struct(members[i] AS m1, y AS m2))))
-        END"""
     )
     # rebalance BLOCKS across cores before pair generation + scoring:
     # the grouped relation is |blocks| rows (~86 at sf0.1, a few MB),
@@ -873,13 +791,13 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # block's pair count.
     grouped = grouped.repartition(spark.sparkContext.defaultParallelism)
     pairs = grouped.filter(F.size("members") >= 2).select(
-        F.explode(pair_expr).alias("p")
+        F.explode(F.expr(_chained_pairs_case("members"))).alias("p")
     )
     return (
         pairs.select(
-            F.least("p.m1.doc_id", "p.m2.doc_id").alias("doc_a"),
-            F.greatest("p.m1.doc_id", "p.m2.doc_id").alias("doc_b"),
-            F.levenshtein(F.col("p.m1.prefix"), F.col("p.m2.prefix")).alias(
+            F.least("p.a.doc_id", "p.b.doc_id").alias("doc_a"),
+            F.greatest("p.a.doc_id", "p.b.doc_id").alias("doc_b"),
+            F.levenshtein(F.col("p.a.prefix"), F.col("p.b.prefix")).alias(
                 "lev_dist"
             ),
         )
@@ -1415,14 +1333,14 @@ ORACLE = {
               ON a.lang IS NOT DISTINCT FROM b.lang
              AND a.len_bucket IS NOT DISTINCT FROM b.len_bucket
              AND a.doc_id < b.doc_id
-            WHERE a.bn <= {LEV_BLOCK_CAP}
+            WHERE a.bn <= {LSH_BUCKET_CAP}
             UNION ALL
             SELECT a.doc_id, b.doc_id, a.prefix, b.prefix
             FROM o a JOIN o b
               ON a.lang IS NOT DISTINCT FROM b.lang
              AND a.len_bucket IS NOT DISTINCT FROM b.len_bucket
-             AND b.rn > a.rn AND b.rn <= a.rn + {LEV_CHAIN_NEIGHBORS}
-            WHERE a.bn > {LEV_BLOCK_CAP}
+             AND b.rn > a.rn AND b.rn <= a.rn + {LSH_CHAIN_NEIGHBORS}
+            WHERE a.bn > {LSH_BUCKET_CAP}
         )
         SELECT least(da, db) AS doc_a, greatest(da, db) AS doc_b,
                CAST(levenshtein(pa, pb) AS INT) AS lev_dist

@@ -22,11 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_time_big_data_architect_spark.operators.dedup import (
-    LSH_BUCKET_CAP,
-    LSH_CHAIN_NEIGHBORS,
-    _chained_pairs_case,
-)
+from real_time_big_data_architect_spark.operators.dedup import hamming_pairs
 from real_time_big_data_architect_spark.tables import fan_out, load_table
 
 MEDIA_SCHEMA = T.StructType(
@@ -471,27 +467,15 @@ def media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup media pairs by perceptual hash: Hamming ≤
-    PHASH_MAX_HAMMING (3) over the 64-bit signatures, banded so the
-    candidate join shuffles only (band, bucket, doc_id) — the simhash
-    blocking discipline applied to the binary media column. Recall is
-    COMPLETE for buckets within the cap: a pair within Hamming ≤ 3 of
-    64 bits cannot disagree on all 4 disjoint 16-bit bands
-    (pigeonhole), so every qualifying pair surfaces as a candidate and
-    is then verified exactly with bit_count.
-
-    Hot-bucket guard (r7, closing the r6 `weak`): buckets are grouped
-    and pair generation goes through the shared
-    ``_chained_pairs_case`` CASE (dedup.py) — exact all-pairs for
-    buckets ≤ LSH_BUCKET_CAP, probe-sorted next-k neighbor chains
-    above it, so a degenerate bucket (1M boilerplate near-identical
-    media) emits n·k candidates instead of n²/2. Same cap/chain
-    constants as MinHash-LSH and SimHash so the three paths cannot
-    drift. The all-pairs ORACLE is exact only while every bucket stays
-    under the cap — pinned where the oracle actually runs by
+    PHASH_MAX_HAMMING (3) over the 64-bit signatures — the simhash
+    blocking (:func:`dedup.hamming_pairs`) applied to the binary media
+    column. The all-pairs ORACLE is exact only while every bucket stays
+    under the hot-bucket cap — pinned where the oracle actually runs by
     tests/test_scale_posture.py::test_phash_buckets_under_cap_where_
     oracle_runs (sf0.001 and sf0.01; at sf0.1 an over-cap bucket exists
-    and the guard's own n·k bound is pinned instead); the over-cap degrade contract (candidates ≤ n·k, every
-    doc still paired) is pinned on an all-identical corpus by
+    and the guard's own n·k bound is pinned instead); the over-cap
+    degrade contract (candidates ≤ n·k, every doc still paired) is
+    pinned on an all-identical corpus by
     tests/test_streaming_and_multimodal.py.
     """
     return phash_dedup_pairs(_phash_corpus(spark, sf_dir))
@@ -503,54 +487,8 @@ def phash_dedup_pairs(corpus: DataFrame) -> DataFrame:
     :func:`media_phash_dedup`, factored so boundary corpora (e.g. the
     all-identical hot-bucket case) test the SAME plan the declared
     query runs."""
-    # explicit partition count: a count-less keyed repartition lets
-    # AQE coalesce the few-MB signature exchange to one partition and
-    # serialize the band bucketing downstream (the dedup_simhash bug
-    # class, tools/parallelcheck.py). Persisted (r13, guide §4/§5):
-    # three consumers read this relation (band bucketing + both sides
-    # of the verification join-back), and without materialization each
-    # consumer re-ran the WHOLE corpus build + MapInPandas signature
-    # kernel — three Python kernel passes per query (measured 4.14 s →
-    # 2.87 s at sf0.1 with one). Same lazy-internal-persist convention
-    # as dedup_minhash's 4-consumer signature relation; callers release
-    # via the session clearCache() discipline.
-    sigs = _phash_sigs(corpus).repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism,
-        F.col("doc_id"),
-    ).persist()
-    buckets = sigs.select(
-        "doc_id",
-        "phash",
-        F.posexplode(
-            F.array(*[F.col(f"band{i}") for i in range(PHASH_BANDS)])
-        ).alias("band", "bucket"),
-    )
-    grouped = buckets.groupBy("band", "bucket").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("phash", "doc_id"))),
-            lambda st: st.doc_id,
-        ).alias("ids")
-    )
-    pairs = (
-        grouped.filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(_chained_pairs_case(LSH_BUCKET_CAP, LSH_CHAIN_NEIGHBORS))
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("phash").alias("pa"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("pb"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "hamming", F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
-        )
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .select("doc_a", "doc_b", "hamming")
+    return hamming_pairs(
+        _phash_sigs(corpus), "phash", PHASH_BANDS, PHASH_MAX_HAMMING
     )
 
 

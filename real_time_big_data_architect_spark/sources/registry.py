@@ -1,8 +1,9 @@
 """Source catalog — the reference's ``SOURCES`` dict re-expressed
 (app.py:40-52): 10 keyless public JSON HTTP APIs, each with its label,
-URL, description, optional headers (S2: User-Agent for weather.gov,
-app.py:71-72) and source-side row cap (S4: limit pushed into the URL,
-app.py:42,45,48; client-side slice for github, app.py:144).
+URL, description and optional headers (S2: User-Agent for weather.gov,
+app.py:71-72). The S4 row caps are applied where the rows are cut: the
+``limit=`` parameter in the URL (app.py:42,45,48) and normalize's
+``GITHUB_CLIENT_CAP`` head slice for github (app.py:144).
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ class SourceSpec:
     url: str
     description: str
     headers: dict[str, str] = field(default_factory=dict)
-    row_cap: int | None = None
 
 
 SOURCES: dict[str, SourceSpec] = {
@@ -28,7 +28,6 @@ SOURCES: dict[str, SourceSpec] = {
             "Air quality (OpenAQ)",
             "https://api.openaq.org/v2/latest?limit=20&sort=desc",  # app.py:42
             "city/parameter measurements",
-            row_cap=20,
         ),
         SourceSpec(
             "open_meteo",
@@ -48,7 +47,6 @@ SOURCES: dict[str, SourceSpec] = {
             "Earthquakes (USGS)",
             "https://earthquake.usgs.gov/fdsnws/event/1/query?format=geojson&limit=50",
             "recent quakes GeoJSON",
-            row_cap=50,
         ),
         SourceSpec(
             "spacex",
@@ -61,7 +59,6 @@ SOURCES: dict[str, SourceSpec] = {
             "GitHub public events",
             "https://api.github.com/events",
             "public event feed",
-            row_cap=30,
         ),
         SourceSpec(
             "nws_alerts",
@@ -69,7 +66,6 @@ SOURCES: dict[str, SourceSpec] = {
             "https://api.weather.gov/alerts/active?limit=20",
             "active US alerts",
             headers={"User-Agent": "real-time-big-data-architect-spark"},
-            row_cap=20,
         ),
         SourceSpec(
             "fx_rates",

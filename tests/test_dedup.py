@@ -285,7 +285,7 @@ def test_paragraph_dedup_keeps_first_occurrence(spark, tmp_path_factory):
 
 
 def test_levenshtein_hot_block_chains_and_matches_oracle(spark, tmp_path):
-    """r5 guard: a block larger than LEV_BLOCK_CAP must switch to
+    """r5 guard: a block larger than LSH_BUCKET_CAP must switch to
     (prefix, doc_id)-sorted neighbor chaining, and the DuckDB oracle
     must replay BOTH branches exactly. Plants one 80-doc hot block of
     prefix-adjacent near-dups (chained branch; > cap=64) plus a small
@@ -314,7 +314,7 @@ def test_levenshtein_hot_block_chains_and_matches_oracle(spark, tmp_path):
     part = glob.glob(str(tmp_path / "d.dir" / "part-*.parquet"))[0]
     shutil.move(part, str(tmp_path / "documents.parquet"))
 
-    assert len({d[0] for d in docs if d[2] == "en"}) > D.LEV_BLOCK_CAP
+    assert len({d[0] for d in docs if d[2] == "en"}) > D.LSH_BUCKET_CAP
 
     got = sorted(
         tuple(r) for r in D.dedup_levenshtein(spark, str(tmp_path)).collect()
@@ -332,10 +332,43 @@ def test_levenshtein_hot_block_chains_and_matches_oracle(spark, tmp_path):
     )
     assert got == want
     assert got  # the chained hot block really produced pairs
-    # chain bound: each doc pairs with at most LEV_CHAIN_NEIGHBORS
+    # chain bound: each doc pairs with at most LSH_CHAIN_NEIGHBORS
     # successors, so the hot block emits <= n*k pairs, never ~n^2/2
     hot_pairs = [p for p in got if p[0] < 100]
-    assert len(hot_pairs) <= 80 * D.LEV_CHAIN_NEIGHBORS
+    assert len(hot_pairs) <= 80 * D.LSH_CHAIN_NEIGHBORS
+
+
+@pytest.mark.parametrize(
+    "n", [2, dedup.LSH_BUCKET_CAP, dedup.LSH_BUCKET_CAP + 1]
+)
+def test_chained_pairs_case_switch_point(spark, n):
+    """The hot-bucket CASE on each side of its switch point, against a
+    Python reference: every one of C(n,2) pairs up to LSH_BUCKET_CAP
+    members; just above it, next-LSH_CHAIN_NEIGHBORS chains in array
+    order with every adjacent pair present."""
+    from itertools import combinations
+
+    ids = [7 + 3 * i for i in range(n)]  # sorted, not contiguous
+    row = (
+        spark.createDataFrame([(ids,)], "ids array<bigint>")
+        .select(F.expr(dedup._chained_pairs_case("ids")).alias("p"))
+        .first()
+    )
+    got = [(s.a, s.b) for s in row.p]
+    if n <= dedup.LSH_BUCKET_CAP:
+        want = list(combinations(ids, 2))
+        assert len(want) == n * (n - 1) // 2
+    else:
+        k = dedup.LSH_CHAIN_NEIGHBORS
+        want = [
+            (ids[i], ids[j])
+            for i in range(n)
+            for j in range(i + 1, min(i + k, n - 1) + 1)
+        ]
+        assert set(zip(ids, ids[1:])) <= set(got)
+        assert len(got) < n * k
+    assert len(got) == len(set(got))
+    assert sorted(got) == sorted(want)
 
 
 def test_dup_rate_and_overlap_on_planted_corpus(spark, tmp_path_factory):

@@ -44,15 +44,18 @@ def server():
 
 @pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_happy_path(spark, server):
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        sources=["binance"],
-        url_overrides={"binance": f"{server}/binance"},
-        status_table="status_ok",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = spark.table("status_ok").collect()
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            sources=["binance"],
+            url_overrides={"binance": f"{server}/binance"},
+            status_table="status_ok",
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        rows = spark.table("status_ok").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS status_ok")
     assert len(rows) >= 1
     r = rows[-1]
     assert r.agent == "primary"
@@ -62,15 +65,18 @@ def test_live_loop_happy_path(spark, server):
 
 @pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_degrades_on_http_error(spark, server):
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        sources=["binance"],
-        url_overrides={"binance": f"{server}/fail"},
-        status_table="status_fail",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = spark.table("status_fail").collect()
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            sources=["binance"],
+            url_overrides={"binance": f"{server}/fail"},
+            status_table="status_fail",
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        rows = spark.table("status_fail").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS status_fail")
     assert len(rows) >= 1
     r = rows[-1]
     assert r.agent == "fallback"  # C2/C4: degraded, stream alive
@@ -127,19 +133,22 @@ def test_live_all_sources_tick_mixed_outcomes(spark, multi_server):
     one degraded to the fallback agent without touching the others
     (per-source C2-C5, the property the 1-source reference loop cannot
     express)."""
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        url_overrides={
-            "binance": f"{multi_server}/binance",
-            "coingecko": f"{multi_server}/coingecko",
-            "usgs_quakes": f"{multi_server}/fail",
-        },
-        sources=["binance", "coingecko", "usgs_quakes"],
-        status_table="status_all_mixed",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = spark.table("status_all_mixed").collect()
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            url_overrides={
+                "binance": f"{multi_server}/binance",
+                "coingecko": f"{multi_server}/coingecko",
+                "usgs_quakes": f"{multi_server}/fail",
+            },
+            sources=["binance", "coingecko", "usgs_quakes"],
+            status_table="status_all_mixed",
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        rows = spark.table("status_all_mixed").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS status_all_mixed")
     by_src = {r.source: r for r in rows}
     assert set(by_src) == {"binance", "coingecko", "usgs_quakes"}
     assert by_src["binance"].agent == "primary"
@@ -157,14 +166,17 @@ def test_offline_all_sources_tick_covers_catalog(spark):
     import os
 
     payload_dir = os.path.join(os.path.dirname(__file__), "payloads")
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        payload_dir=payload_dir,
-        status_table="status_all_offline",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = spark.table("status_all_offline").collect()
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            payload_dir=payload_dir,
+            status_table="status_all_offline",
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        rows = spark.table("status_all_offline").collect()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS status_all_offline")
     assert len(rows) == 10
     assert {r.source for r in rows} == set(
         __import__(

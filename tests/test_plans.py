@@ -7,6 +7,8 @@ as TakeOrderedAndProject — a plan regression fails the suite.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from real_time_big_data_architect_spark.operators import (
@@ -66,16 +68,26 @@ def test_no_cartesian_in_star_join(spark, sf_small):
 
 
 def test_minhash_lsh_join_does_not_shuffle_signatures(spark, sf_small):
-    """The bucket self-join carries only (band,bucket,doc_id): neither
-    join side's shuffle output may include the minhash array."""
+    """The (band, bucket) shuffle carries only the bucket key and the
+    collected (probe, doc_id) members: neither the exchange's output
+    nor the map-side aggregate feeding it holds the minhash array."""
     df = dedup.dedup_minhash_lsh(spark, sf_small)
     plan = explain.formatted_plan(df)
-    join_section = plan.split("SortMergeJoin")
-    # locate the bucket-join keys: band + bucket present somewhere
-    assert "band" in plan and "bucket" in plan
-    # the est_jaccard scoring happens after pair dedup; HashAggregate
-    # (distinct) must appear between the bucket join and the sig re-join
-    assert "HashAggregate" in plan
+    nodes = plan.split("\n\n")
+    bucket_exchanges = [
+        i
+        for i, node in enumerate(nodes)
+        if re.match(r"\(\d+\) Exchange\n", node)
+        and re.search(r"Arguments: hashpartitioning\(band#\d+, bucket#\d+, ", node)
+    ]
+    assert len(bucket_exchanges) == 1, plan
+    i = bucket_exchanges[0]
+    exchange_input = re.search(r"^Input \[\d+\]: (.*)$", nodes[i], re.M).group(1)
+    assert "minhash" not in exchange_input, nodes[i]
+    partial = nodes[i - 1]
+    assert partial.split("\n")[0].endswith("HashAggregate"), partial
+    partial_input = re.search(r"^Input \[\d+\]: (.*)$", partial, re.M).group(1)
+    assert "minhash" not in partial_input, partial
 
 
 def test_json_extract_stays_jvm_side(spark, sf_small):
