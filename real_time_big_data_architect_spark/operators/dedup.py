@@ -332,6 +332,24 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, minhash) of the non-blank documents.
+
+    Blank docs (NULL signatures) are not near-dup candidates — and
+    concat_ws() skips NULLs, so leaving them in would funnel every blank
+    doc into one shared md5('') bucket. They are dropped JVM-side before
+    fan_out: a NULL filter on the kernel's output is pushed below the
+    exchange and runs the kernel twice per document. Spark's
+    ``trim(BOTH chars FROM text)`` strips the kernel guard's ASCII-6 set
+    (two-argument ``trim(a, b)`` would strip a's chars from b).
+    """
+    docs = load_table(spark, sf_dir, "documents").filter(
+        "trim(BOTH concat(' ', chr(9), chr(10), chr(13), chr(11), chr(12))"
+        " FROM text) <> ''"
+    )
+    return fan_out(docs).select("doc_id", _minhash_text("text").alias("minhash"))
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH (NS6a).
 
@@ -345,10 +363,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard) — raw doc_id order would interleave near-dup families and
     miss pairs.
     """
-    # Null signatures (blank docs) are not near-dup candidates — and
-    # concat_ws() skips NULLs, so leaving them in would funnel every
-    # blank doc into one shared md5('') bucket.
-    sigs = _minhash_frame(spark, sf_dir).filter(F.col("minhash").isNotNull())
+    sigs = _lsh_signatures(spark, sf_dir)
     rows_per_band = N_MINHASHES // N_BANDS
     # One SQL string -> one py4j round trip. The equivalent nested
     # Column construction is ~100 gateway calls and measured >1 s of

@@ -2,8 +2,12 @@
 
 ``app.py`` per tick: fetch (app.py:67-81) → normalize_to_df
 (app.py:84-189) → render + agent commentary (app.py:192-247). Here the
-same loop is: http_poll_all streaming source → ``foreachBatch`` →
-normalize → :mod:`plans.agents` insights → status-table append.
+same loop is: a JVM ``rate-micro-batch`` clock (one row per
+micro-batch, never read) → ``foreachBatch`` → :func:`http_poll.poll_all`
+in the driver's own Python → normalize → :mod:`plans.agents` insights →
+status-table append. The clock keeps the loop's checkpoint, so tick ids
+are batch ids and keep rising across a restart; the poll needs no
+Python DataSource, so starting the loop starts no Python process.
 Errors degrade exactly like the reference: a failed fetch or empty
 normalization produces a fallback status row, never a crashed stream
 (C2-C5).
@@ -23,8 +27,9 @@ from pyspark.sql import DataFrame, Row, SparkSession
 
 from real_time_big_data_architect_spark.plans import agents
 from real_time_big_data_architect_spark.sources.http_poll import (
-    HTTP_POLL_AVAILABLE,
     MAX_POLL_ROWS_PER_BATCH,
+    poll_all,
+    poll_plan,
 )
 
 STATUS_SCHEMA = (
@@ -61,29 +66,10 @@ def _status_appender(spark: SparkSession, table: str):
     return append
 
 
-def _bounded_rows(batch_df: DataFrame, cols: list[str]) -> list:
-    """Collect a poll batch in one job and check the row bound.
-
-    The transfer is bounded where rows are created: the poll readers
-    emit one row per source and refuse more than
-    ``MAX_POLL_ROWS_PER_BATCH`` sources. A plain collect is one job;
-    ``limit(cap + 1).collect()`` runs CollectLimit's incremental take,
-    up to three serial jobs over a many-partition batch."""
-    rows = batch_df.select(*cols).collect()
-    if len(rows) > MAX_POLL_ROWS_PER_BATCH:
-        raise RuntimeError(
-            f"poll batch exceeded {MAX_POLL_ROWS_PER_BATCH} rows — the"
-            " source contract is one row per source per tick; refusing"
-            " to process a misbehaving batch"
-        )
-    return rows
-
-
-def process_tick(
-    spark: SparkSession, batch_df: DataFrame, tick: int
-) -> list[Row]:
-    """One micro-batch: raw ``(source, payload, error)`` rows → the
-    tick's status rows (``STATUS_SCHEMA``), one per source.
+def process_tick(spark: SparkSession, rows: list[tuple], tick: int) -> list[Row]:
+    """One micro-batch: the polled ``(fetch_ts, source, payload,
+    error)`` rows → the tick's status rows (``STATUS_SCHEMA``), one per
+    source.
 
     Fetch failures degrade immediately (C4, no Spark work); every
     healthy payload goes to :func:`agents.batch_insights`, which
@@ -93,15 +79,20 @@ def process_tick(
     only its own row (C2-C5): try_cast picks, the shared C3 formatter,
     and a per-source rerun when the combined statement raises.
     """
-    rows = _bounded_rows(batch_df, ["source", "payload", "error"])
+    if len(rows) > MAX_POLL_ROWS_PER_BATCH:
+        raise RuntimeError(
+            f"poll batch exceeded {MAX_POLL_ROWS_PER_BATCH} rows — the"
+            " source contract is one row per source per tick; refusing"
+            " to process a misbehaving batch"
+        )
     status = []
     payloads = {}
-    for r in rows:
-        if r.error is not None or r.payload is None:
-            insight = agents.fallback_insight(r.source, r.error or "no payload")
+    for _fetch_ts, source, payload, error in rows:
+        if error is not None or payload is None:
+            insight = agents.fallback_insight(source, error or "no payload")
             status.append(_status_row(tick, insight))
         else:
-            payloads[r.source] = r.payload
+            payloads[source] = payload
     insights = agents.batch_insights(spark, payloads)
     return status + [_status_row(tick, i) for i in insights.values()]
 
@@ -120,31 +111,34 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     """Start the CONCURRENT every-source loop; returns the query.
 
     Exceeds the reference's 1-of-10 selectbox tick (app.py:57-61): each
-    micro-batch polls the whole catalog as one ``http_poll_all`` read
-    (every source fetched at once on the driver, one thread per source)
+    micro-batch polls the whole catalog (:func:`http_poll.poll_all`,
+    every source fetched at once on the driver, one thread per source)
     and appends one status row per source per tick. A failing or slow
     endpoint degrades only its own row (C2-C5 per source), never the
-    tick.
+    tick. The poll plan is resolved here, once, so a source list beyond
+    ``MAX_POLL_ROWS_PER_BATCH`` is refused before any stream starts.
+    The micro-batch clock is ``rate-micro-batch`` (one row per batch,
+    never read); a replayed batch re-polls, since a poll cannot be
+    re-read.
     """
-    if not HTTP_POLL_AVAILABLE:  # pragma: no cover
-        raise NotImplementedError("Python DataSource API unavailable")
-    from real_time_big_data_architect_spark.sources.http_poll import (
-        register_http_poll,
-    )
-
-    register_http_poll(spark)
-    reader = spark.readStream.format("http_poll_all")
+    options = {}
     if payload_dir:
-        reader = reader.option("payload_dir", payload_dir)
+        options["payload_dir"] = payload_dir
     if url_overrides:
-        reader = reader.option("urls", json.dumps(url_overrides))
+        options["urls"] = json.dumps(url_overrides)
     if sources:
-        reader = reader.option("sources", ",".join(sources))
-    stream = reader.load()
+        options["sources"] = ",".join(sources)
+    plan = poll_plan(options)
+    stream = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 1)
+        .option("numPartitions", 1)
+        .load()
+    )
     append_status = _status_appender(spark, status_table)
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        status = process_tick(batch_df.sparkSession, batch_df, batch_id)
+        status = process_tick(batch_df.sparkSession, poll_all(plan), batch_id)
         if status:
             append_status(status)
 

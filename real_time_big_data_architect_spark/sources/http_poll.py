@@ -1,21 +1,22 @@
 """HTTP polling source (reference Extract stage, app.py:67-81).
 
-Two layers:
+Three layers:
 
 - :func:`fetch` — the reference's fetch semantics re-implemented with
   stdlib urllib (no ``requests`` dependency): 15 s timeout, optional
   header injection (S2), HTTP-error surfaced, JSON-parse with plain-text
   fallback, returns ``(payload_text, error)``.
-- :class:`HttpPollAllDataSource` — a Spark 4 Python DataSource
-  (``format("http_poll_all")``): each micro-batch (or snapshot) polls
-  every planned source and emits one row ``(fetch_ts, source, payload,
-  error)`` per source; downstream, ``sources.normalize`` turns each
-  payload into its tidy table. A one-source poll is the same source
-  with ``sources=<key>``. Gated behind an import-try — the API is young
-  and never exercised by the driver (tests use fixture payloads, no
-  network; SURVEY §7 M4).
-
-Live wiring: :func:`plans.pipeline.run_poll_all_pipeline`.
+- :func:`poll_all` — one poll of every planned source at once, one
+  thread per source, in the calling process: one row ``(fetch_ts,
+  source, payload, error)`` per source, in plan order. The live loop
+  (:func:`plans.pipeline.run_poll_all_pipeline`) calls it inside its
+  ``foreachBatch``, so a tick starts no Python worker for the poll.
+- :class:`HttpPollAllDataSource` — a Spark 4 Python batch DataSource
+  (``format("http_poll_all")``) over the same plan, for the declared
+  snapshot queries: one row per source, each polled by its own task.
+  Downstream, ``sources.normalize`` turns each payload into its tidy
+  table. Gated behind an import-try — the API is young (tests use
+  fixture payloads, no network; SURVEY §7 M4).
 """
 
 from __future__ import annotations
@@ -38,10 +39,10 @@ from real_time_big_data_architect_spark.streaming import progress
 MAX_PAYLOAD_BYTES = 16 * 1024 * 1024
 
 #: driver-funnel guard (r5 verdict item 6): the poll contract is one
-#: row per source per tick (catalog = 10 sources), and poll batches
-#: are collected to the driver (plans/pipeline.py). The all-sources
-#: readers refuse a source list beyond this cap, so a batch holds at
-#: most this many rows; with payload size capped at fetch time
+#: row per source per tick (catalog = 10 sources), and a tick's rows
+#: live on the driver (plans/pipeline.py). The poll plan refuses a
+#: source list beyond this cap, so a batch holds at most this many
+#: rows; with payload size capped at fetch time
 #: (MAX_PAYLOAD_BYTES), cap × payload bounds the driver transfer
 #: absolutely.
 MAX_POLL_ROWS_PER_BATCH = 64
@@ -81,7 +82,7 @@ def fetch(
 
 
 def _poll_once(options: dict) -> tuple[float, str | None, str | None]:
-    """One poll of one plan entry (:func:`_multi_poll_options`):
+    """One poll of one plan entry (:func:`poll_plan`):
     (fetch_ts, payload, error).
 
     Three addressing modes, checked in order:
@@ -111,11 +112,70 @@ def _poll_once(options: dict) -> tuple[float, str | None, str | None]:
 
 
 def _poll_source(item: tuple[str, dict]) -> tuple:
-    """One ``(source_key, options)`` plan entry of the all-sources
-    readers → its ``(fetch_ts, source, payload, error)`` row."""
+    """One ``(source_key, options)`` plan entry → its ``(fetch_ts,
+    source, payload, error)`` row."""
     key, opts = item
     ts, payload, error = _poll_once(opts)
     return ts, key, payload, error
+
+
+def poll_plan(options: dict) -> list[tuple[str, dict]]:
+    """Resolve the per-source polling plan: ``[(source_key,
+    single-source options), ...]``.
+
+    Addressing, per source key (subset via csv option ``sources``;
+    default = the full 10-source catalog):
+    - ``payload_dir`` — OFFLINE: ``{dir}/{key}.json`` captured
+      payloads (tests / the driver's no-network sandbox);
+    - ``urls`` — JSON object ``{key: url}`` overriding the catalog
+      URL (loopback servers in tests), falling back to the catalog
+      for keys not present;
+    - otherwise the catalog entry itself (live).
+
+    Raises ``ValueError`` for more than ``MAX_POLL_ROWS_PER_BATCH``
+    sources: each source is one row per tick, so the cap on sources
+    is the cap on a batch's rows.
+    """
+    from real_time_big_data_architect_spark.sources.registry import SOURCES
+
+    keys = [
+        k for k in options.get("sources", ",".join(SOURCES)).split(",") if k
+    ]
+    if len(keys) > MAX_POLL_ROWS_PER_BATCH:
+        raise ValueError(
+            f"poll plan: {len(keys)} sources exceed"
+            f" MAX_POLL_ROWS_PER_BATCH={MAX_POLL_ROWS_PER_BATCH}; each"
+            " source is one row per tick, and a tick's rows live on the"
+            " driver"
+        )
+    overrides = json.loads(options.get("urls", "{}"))
+    plan = []
+    for key in keys:
+        if "payload_dir" in options:
+            plan.append(
+                (key, {"payload_path": f"{options['payload_dir']}/{key}.json"})
+            )
+        elif key in overrides:
+            plan.append((key, {"url": overrides[key]}))
+        else:
+            plan.append((key, {"source": key}))
+    return plan
+
+
+def poll_all(plan: list[tuple[str, dict]]) -> list[tuple]:
+    """Poll every plan entry at once, one thread per source, in the
+    calling process; rows come back in plan order.
+
+    The reference polls 1 of its 10 sources per 60 s tick
+    (app.py:57-61, the ``st.selectbox`` choice); the live loop exceeds
+    that: every tick fetches the whole catalog concurrently, so a hung
+    endpoint costs the tick one timeout, and a slow or failing endpoint
+    degrades only its own row (the error column), never the tick.
+    ``MAX_POLL_ROWS_PER_BATCH`` bounds the threads, as it bounds the
+    rows.
+    """
+    with ThreadPoolExecutor(max_workers=max(len(plan), 1)) as pool:
+        return list(pool.map(_poll_source, plan))
 
 
 try:
@@ -123,91 +183,14 @@ try:
         DataSource,
         DataSourceReader,
         InputPartition,
-        SimpleDataSourceStreamReader,
     )
-
-    def _multi_poll_options(options: dict) -> list[tuple[str, dict]]:
-        """Resolve the per-source polling plan for the all-sources
-        reader: ``[(source_key, single-source options), ...]``.
-
-        Addressing, per source key (subset via csv option ``sources``;
-        default = the full 10-source catalog):
-        - ``payload_dir`` — OFFLINE: ``{dir}/{key}.json`` captured
-          payloads (tests / the driver's no-network sandbox);
-        - ``urls`` — JSON object ``{key: url}`` overriding the catalog
-          URL (loopback servers in tests), falling back to the catalog
-          for keys not present;
-        - otherwise the catalog entry itself (live).
-
-        Raises ``ValueError`` for more than ``MAX_POLL_ROWS_PER_BATCH``
-        sources: each source is one row per tick, so the cap on sources
-        is the cap on a batch's rows.
-        """
-        from real_time_big_data_architect_spark.sources.registry import (
-            SOURCES,
-        )
-
-        keys = [
-            k for k in options.get("sources", ",".join(SOURCES)).split(",")
-            if k
-        ]
-        if len(keys) > MAX_POLL_ROWS_PER_BATCH:
-            raise ValueError(
-                f"http_poll_all: {len(keys)} sources exceed"
-                f" MAX_POLL_ROWS_PER_BATCH={MAX_POLL_ROWS_PER_BATCH}; each"
-                " source is one row per tick, and poll batches are"
-                " collected to the driver"
-            )
-        overrides = json.loads(options.get("urls", "{}"))
-        plan = []
-        for key in keys:
-            if "payload_dir" in options:
-                plan.append(
-                    (key, {"payload_path": f"{options['payload_dir']}/{key}.json"})
-                )
-            elif key in overrides:
-                plan.append((key, {"url": overrides[key]}))
-            else:
-                plan.append((key, {"source": key}))
-        return plan
-
-    class _HttpMultiPollStreamReader(SimpleDataSourceStreamReader):
-        """All catalog sources per micro-batch, polled at once on a
-        driver-side thread pool (one thread per source) in Spark's
-        source runner; rows come back in plan order.
-
-        The reference polls 1 of its 10 sources per 60 s tick
-        (app.py:57-61, the ``st.selectbox`` choice); this reader
-        exceeds that: every tick fetches the whole catalog
-        concurrently, so a hung endpoint costs the tick one timeout,
-        and a slow or failing endpoint degrades only its own row (the
-        error column), never the tick. ``MAX_POLL_ROWS_PER_BATCH``
-        bounds the threads, as it bounds the rows.
-        """
-
-        def __init__(self, options: dict[str, str]) -> None:
-            self._plan = _multi_poll_options(dict(options))
-
-        def initialOffset(self) -> dict:
-            return {"poll": 0}
-
-        def _poll_all(self) -> list[tuple]:
-            with ThreadPoolExecutor(max_workers=max(len(self._plan), 1)) as pool:
-                return list(pool.map(_poll_source, self._plan))
-
-        def read(self, start: dict) -> tuple[list, dict]:
-            return self._poll_all(), {"poll": start["poll"] + 1}
-
-        def readBetweenOffsets(self, start: dict, end: dict) -> list:  # noqa: ARG002
-            # a replayed batch re-polls: a poll cannot be re-read
-            return self._poll_all()
 
     class _HttpMultiPollBatchReader(DataSourceReader):
         """One-shot all-sources snapshot: a 10-row frame fetched by 10
         parallel tasks."""
 
         def __init__(self, options: dict[str, str]) -> None:
-            self._plan = _multi_poll_options(dict(options))
+            self._plan = poll_plan(dict(options))
 
         def partitions(self):
             return [InputPartition(item) for item in self._plan]
@@ -217,7 +200,7 @@ try:
 
     class HttpPollAllDataSource(DataSource):
         """``format("http_poll_all")`` — the concurrent every-source
-        poll (one row per source per tick/snapshot)."""
+        snapshot (one row per source)."""
 
         @classmethod
         def name(cls) -> str:
@@ -228,9 +211,6 @@ try:
 
         def reader(self, schema):
             return _HttpMultiPollBatchReader(self.options)
-
-        def simpleStreamReader(self, schema):
-            return _HttpMultiPollStreamReader(self.options)
 
     def register_http_poll(spark) -> None:
         """Make ``format("http_poll_all")`` resolvable in this session."""
@@ -314,8 +294,8 @@ def http_poll_all_snapshot(spark, sf_dir: str):  # noqa: ARG001
 
 def stream_poll_all_tick(spark, sf_dir: str):  # noqa: ARG001
     """The concurrent every-source loop as a TRUE streaming query, one
-    availableNow tick over the offline payload catalog: http_poll_all
-    stream source → foreachBatch (per-source normalize + agent
+    availableNow tick over the offline payload catalog: rate-micro-batch
+    clock → foreachBatch (catalog poll, per-source normalize + agent
     commentary) → status table. Oracle-backed: after one tick the
     status table must hold exactly one row per catalog source whose
     n_rows equals the branch's cardinality rule and whose agent is

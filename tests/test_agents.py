@@ -60,10 +60,7 @@ def test_commentary_routes_empty_to_fallback(spark):  # C3+C5
 
 
 def test_commentary_routes_fetch_error_to_fallback(spark):  # C4
-    batch = spark.createDataFrame(
-        [("spacex", None, "HTTP 503")],
-        "source string, payload string, error string",
-    )
+    batch = [(0.0, "spacex", None, "HTTP 503")]
     [row] = pipeline.process_tick(spark, batch, tick=0)
     assert row.agent == "fallback"
     assert "HTTP 503" in row.headline

@@ -233,6 +233,7 @@ def test_blank_docs_never_pair(spark, tmp_path_factory):
         (3, "", "en", "web", 0),
         (4, normal, "en", "docs", len(normal)),
         (5, normal, "en", "docs", len(normal)),
+        (6, " \t\n\r\x0b\x0c", "en", "web", 6),
     ]
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
@@ -243,6 +244,7 @@ def test_blank_docs_never_pair(spark, tmp_path_factory):
         for r in dedup.minhash_signatures(spark, str(tmp)).collect()
     }
     assert sigs[0] is None and sigs[1] is None and sigs[2] is None
+    assert sigs[6] is None
     assert sigs[4] is not None
     sh = {
         r.doc_id: r.simhash

@@ -2,8 +2,8 @@
 
 A loopback http.server stands in for the public APIs — no external
 network. Covers S1 (fetch), S2 (conditional User-Agent), the
-json-else-text fallback, the error path (C4), and the Spark 4 Python
-streaming DataSource end-to-end.
+json-else-text fallback, the error path (C4), and one live-loop tick
+end-to-end.
 """
 
 from __future__ import annotations
@@ -103,39 +103,40 @@ def test_custom_headers_passed(server):
     assert err is None  # headers accepted without breaking the request
 
 
-@pytest.mark.skipif(
-    not http_poll.HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable"
-)
 def test_http_poll_datasource_end_to_end(spark, server):
-    """Register the source, run one micro-batch, read the sink."""
-    http_poll.register_http_poll(spark)
-    q = (
-        spark.readStream.format("http_poll_all")
-        .option("sources", "binance")
-        .option("urls", json.dumps({"binance": f"{server}/json"}))
-        .load()
-        .writeStream.format("memory")
-        .queryName("http_poll_sink")
-        .trigger(once=True)
-        .start()
+    """One tick of the live loop against the loopback server: the poll
+    row carries the served payload, and the tick appends its status."""
+    from real_time_big_data_architect_spark.plans import pipeline
+
+    options = {"sources": "binance", "urls": json.dumps({"binance": f"{server}/json"})}
+    [(fetch_ts, source, payload, error)] = http_poll.poll_all(
+        http_poll.poll_plan(options)
     )
-    q.awaitTermination(60)
-    rows = spark.sql("SELECT * FROM http_poll_sink").collect()
+    assert (source, error) == ("binance", None)
+    assert json.loads(payload)["price"] == "64250.10"
+    assert fetch_ts > 0
+    table = "http_poll_sink"
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            sources=["binance"],
+            url_overrides={"binance": f"{server}/json"},
+            status_table=table,
+            available_now=True,
+        )
+        q.awaitTermination(60)
+        rows = spark.table(table).collect()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert len(rows) >= 1
-    row = rows[0]
-    assert row.error is None
-    assert json.loads(row.payload)["price"] == "64250.10"
-    assert row.fetch_ts > 0
+    assert (rows[0].agent, rows[0].headline) == ("primary", "BTCUSDT 64,250.10")
 
 
-@pytest.mark.skipif(
-    not http_poll.HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable"
-)
 def test_all_sources_stream_reader_fetches_every_source_at_once(monkeypatch):
-    """The all-sources stream reader polls every planned source at the
-    same time (each poll waits at a barrier only all of them together
-    can pass), returns the rows in plan order although the polls finish
-    in reverse order, and advances the offset by one poll."""
+    """The live loop's poll (``poll_all``) polls every planned source at
+    the same time (each poll waits at a barrier only all of them
+    together can pass) and returns the rows in plan order although the
+    polls finish in reverse order."""
     import time
 
     from real_time_big_data_architect_spark.sources.registry import SOURCES
@@ -150,10 +151,6 @@ def test_all_sources_stream_reader_fetches_every_source_at_once(monkeypatch):
         return 1.0, f"payload of {key}", None
 
     monkeypatch.setattr(http_poll, "_poll_once", concurrent_poll)
-    reader = http_poll.HttpPollAllDataSource(
-        {"payload_dir": "/payloads"}
-    ).simpleStreamReader(None)
-    rows, end = reader.read({"poll": 0})
+    rows = http_poll.poll_all(http_poll.poll_plan({"payload_dir": "/payloads"}))
     assert [r[1] for r in rows] == keys
     assert [r[2] for r in rows] == [f"payload of {k}" for k in keys]
-    assert end == {"poll": 1}

@@ -42,7 +42,6 @@ def server():
     srv.shutdown()
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_happy_path(spark, server):
     try:
         q = pipeline.run_poll_all_pipeline(
@@ -63,7 +62,6 @@ def test_live_loop_happy_path(spark, server):
     assert r.n_rows == 1
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_loop_degrades_on_http_error(spark, server):
     try:
         q = pipeline.run_poll_all_pipeline(
@@ -126,7 +124,6 @@ def multi_server():
     srv.shutdown()
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_live_all_sources_tick_mixed_outcomes(spark, multi_server):
     """One concurrent tick over a 3-source subset: two sources succeed,
     one 503s — the tick yields one status row PER source, the failing
@@ -159,7 +156,6 @@ def test_live_all_sources_tick_mixed_outcomes(spark, multi_server):
     assert "unavailable" in by_src["usgs_quakes"].headline
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_offline_all_sources_tick_covers_catalog(spark):
     """The offline (payload_dir) all-sources tick normalizes every
     catalog branch in one micro-batch: 10 status rows, all primary."""
@@ -190,19 +186,13 @@ def test_offline_all_sources_tick_covers_catalog(spark):
 
 def test_oversized_poll_batch_fails_loudly(spark):
     """r5 verdict item 6: a poll batch beyond MAX_POLL_ROWS_PER_BATCH
-    must be refused with a clear error (the poll readers bound the
-    transfer itself where rows are created; see the test below)."""
-    big = spark.range(pipeline.MAX_POLL_ROWS_PER_BATCH + 5).selectExpr(
-        "'binance' AS source", "'{}' AS payload", "CAST(NULL AS STRING) AS error"
-    )
+    must be refused with a clear error (the poll plan also bounds the
+    rows where they are created; see the refusal tests below)."""
+    big = [(0.0, "binance", "{}", None)] * (pipeline.MAX_POLL_ROWS_PER_BATCH + 5)
     with pytest.raises(RuntimeError, match="exceeded .* rows"):
         pipeline.process_tick(spark, big, tick=0)
     # at the cap: processes normally (one status row)
-    ok = spark.range(1).selectExpr(
-        "'binance' AS source",
-        "'{\"symbol\": \"BTCUSDT\", \"price\": \"1.0\"}' AS payload",
-        "CAST(NULL AS STRING) AS error",
-    )
+    ok = [(0.0, "binance", '{"symbol": "BTCUSDT", "price": "1.0"}', None)]
     out = pipeline.process_tick(spark, ok, tick=0)
     assert len(out) == 1 and out[0].source == "binance"
 
@@ -215,6 +205,11 @@ def test_poll_all_read_refuses_more_sources_than_the_row_cap(spark):
     """The row cap is enforced where rows are created: each source is
     one row per tick, so an http_poll_all read naming more sources than
     MAX_POLL_ROWS_PER_BATCH is refused before any poll runs."""
+    from real_time_big_data_architect_spark.sources.http_poll import (
+        register_http_poll,
+    )
+
+    register_http_poll(spark)
     keys = [f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)]
     with pytest.raises(Exception, match="MAX_POLL_ROWS_PER_BATCH"):
         (
@@ -278,7 +273,6 @@ _FIXTURE_ROWS = {
 }
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 def test_malformed_values_degrade_only_their_own_sources(spark, tmp_path):
     """Under ANSI mode one malformed value degrades only its own source,
     although the whole tick is one statement: an ISS latitude of "n/a"
@@ -317,37 +311,73 @@ def test_malformed_values_degrade_only_their_own_sources(spark, tmp_path):
             assert (r.agent, r.n_rows) == ("primary", n), r
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
-def test_bounded_rows_collects_a_poll_batch_in_one_job(spark):
-    """The per-tick poll collect over the ten poll partitions is a single
-    Spark job (a limit(cap + 1) collect ran as three serial jobs)."""
-    from real_time_big_data_architect_spark.sources.http_poll import (
-        register_http_poll,
-    )
+def test_loop_refuses_more_sources_than_the_row_cap_before_starting(spark):
+    """The live loop resolves its poll plan at start: more sources than
+    MAX_POLL_ROWS_PER_BATCH are refused before any stream starts."""
+    keys = [f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)]
+    before = len(spark.streams.active)
+    with pytest.raises(ValueError, match="MAX_POLL_ROWS_PER_BATCH"):
+        pipeline.run_poll_all_pipeline(
+            spark, payload_dir=_PAYLOAD_DIR, sources=keys, available_now=True
+        )
+    assert len(spark.streams.active) == before
 
-    register_http_poll(spark)
-    raw = spark.read.format("http_poll_all").option(
-        "payload_dir", _PAYLOAD_DIR
-    ).load()
+
+def test_catalog_tick_runs_two_jobs(spark):
+    """A 10-source tick is two Spark jobs: the agents statement and the
+    status append. The poll runs in the driver's own Python and the
+    micro-batch clock's row is never read, so neither adds a job (the
+    per-tick collect of a Python DataSource poll batch was a third)."""
+    table = "status_two_jobs"
+    q = pipeline.run_poll_all_pipeline(
+        spark,
+        payload_dir=_PAYLOAD_DIR,
+        status_table=table,
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
     sc = spark.sparkContext
-    group = "bounded_rows_one_job"
-    sc.setJobGroup(group, "poll batch collect")
-    try:
-        rows = pipeline._bounded_rows(raw, ["source", "payload", "error"])
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     # job events reach the status store through the async listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(rows) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    n_status = spark.table(table).count()
+    spark.sql(f"DROP TABLE {table}")
+    assert [json.loads(p.json)["batchId"] for p in q.recentProgress] == [0]
+    assert n_status == 10
+    assert len(jobs) == 2, jobs
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
+def test_loop_needs_no_python_datasource(spark, monkeypatch):
+    """The live loop registers no Python DataSource: with registration
+    made to raise, a catalog tick still appends the correct status row
+    for every source."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    def refuse(self, dataSource):  # noqa: ARG001
+        raise AssertionError("the live loop registered a Python DataSource")
+
+    monkeypatch.setattr(DataSourceRegistration, "register", refuse)
+    table = "status_no_pyds"
+    q = pipeline.run_poll_all_pipeline(
+        spark,
+        payload_dir=_PAYLOAD_DIR,
+        status_table=table,
+        available_now=True,
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    rows = {r.source: r for r in spark.table(table).collect()}
+    spark.sql(f"DROP TABLE {table}")
+    assert {s: (r.tick, r.agent, r.n_rows) for s, r in rows.items()} == {
+        s: (0, "primary", n) for s, n in _FIXTURE_ROWS.items()
+    }
+
+
 def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
     """A loop restarted from its checkpoint carries on from the
-    checkpointed poll offset: every source offset rises across the
-    restart, and every tick of both runs leaves one status row per
-    source."""
+    checkpointed clock offset: the micro-batch clock's offset rises
+    across the restart, and every tick of both runs leaves one status
+    row per source."""
     ckpt = str(tmp_path / "ckpt")
     table = "status_all_restart"
     sources = ["binance", "iss_now"]
@@ -365,7 +395,7 @@ def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
         for p in q.recentProgress:
             src = json.loads(p.json)["sources"][0]
             offsets.append((src["startOffset"], src["endOffset"]))
-    ticks = [end["poll"] for _, end in offsets]
+    ticks = [end["offset"] for _, end in offsets]
     assert len(ticks) >= 2 and ticks == sorted(set(ticks)), offsets
     rows = spark.table(table).collect()
     spark.sql(f"DROP TABLE {table}")
@@ -376,7 +406,6 @@ def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
     assert all(sorted(v) == sorted(sources) for v in by_tick.values()), by_tick
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
 @pytest.mark.parametrize("table_exists", [False, True])
 def test_status_append_keeps_headline_bytes(spark, multi_server, table_exists):
     """The per-tick status append lands a headline holding quotes, a

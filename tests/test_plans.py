@@ -90,6 +90,19 @@ def test_minhash_lsh_join_does_not_shuffle_signatures(spark, sf_small):
     assert "minhash" not in partial_input, partial
 
 
+def test_minhash_lsh_signatures_run_the_kernel_once(spark, sf_small):
+    """The LSH signature relation evaluates the MinHash kernel once per
+    document, after fan_out's exchange: blank documents are dropped
+    JVM-side (pushed into the scan), so no NULL filter on the kernel's
+    output drags a second kernel call below the exchange."""
+    plan = dedup._lsh_signatures(spark, sf_small)._jdf.queryExecution()
+    lines = plan.executedPlan().toString().splitlines()
+    kernel = [i for i, ln in enumerate(lines) if "ArrowEvalPython [_minhash_text" in ln]
+    exchange = [i for i, ln in enumerate(lines) if "Exchange RoundRobinPartitioning" in ln]
+    assert len(kernel) == 1 and len(exchange) == 1, lines
+    assert kernel[0] < exchange[0], lines  # the tree prints parents first
+
+
 def test_json_extract_stays_jvm_side(spark, sf_small):
     plan = explain.formatted_plan(scalars.json_extract(spark, sf_small))
     # one partial+final hash agg pair, no Python evaluation anywhere

@@ -1,5 +1,6 @@
-"""Spark 4 Python DataSource (http_poll_all): batch + streaming over the
-captured payload fixtures, with the normalize layer stacked on top."""
+"""Spark 4 Python DataSources over the captured payload fixtures: the
+http_poll_all batch snapshot with the normalize layer stacked on top,
+the live loop's ticks, and the jsonl_sink writer."""
 
 from __future__ import annotations
 
@@ -47,38 +48,46 @@ def test_missing_payload_file_degrades_to_error_row(spark):
 
 
 def test_streaming_ticks_produce_one_row_per_batch(spark, tmp_path):
-    """The 60 s tick as a real stream: each micro-batch is one poll.
-    Run with a fast trigger, wait for >=2 ticks, stop."""
-    register_http_poll(spark)
-    stream = (
-        spark.readStream.format("http_poll_all")
-        .option("payload_dir", PAYLOADS)
-        .option("sources", "iss_now")
-        .load()
+    """The 60 s tick as a real stream: each micro-batch polls the one
+    source once and appends one status row. Run with a fast trigger,
+    wait for >=2 ticks, stop."""
+    from real_time_big_data_architect_spark.plans import pipeline
+    from real_time_big_data_architect_spark.sources.http_poll import (
+        poll_all,
+        poll_plan,
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("poll_ticks")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 seconds")
-        .start()
+
+    [(_, _, payload, _)] = poll_all(
+        poll_plan({"payload_dir": PAYLOADS, "sources": "iss_now"})
+    )
+    assert '"iss_position"' in payload
+    table = "poll_ticks"
+    q = pipeline.run_poll_all_pipeline(
+        spark,
+        payload_dir=PAYLOADS,
+        sources=["iss_now"],
+        status_table=table,
+        processing_time="1 seconds",
+        checkpoint_location=str(tmp_path / "ckpt"),
     )
     try:
         deadline = time.time() + 60
         n = 0
         while time.time() < deadline:
-            n = spark.sql("SELECT COUNT(*) c FROM poll_ticks").first().c
+            n = spark.sql(f"SELECT COUNT(DISTINCT tick) c FROM {table}").first().c
             if n >= 2:
                 break
             time.sleep(0.5)
         assert n >= 2, f"only {n} ticks arrived"
-        rows = spark.sql(
-            "SELECT * FROM poll_ticks WHERE payload IS NOT NULL LIMIT 1"
-        ).collect()
-        assert '"iss_position"' in rows[0].payload
     finally:
         q.stop()
+    rows = spark.table(table).collect()
+    spark.sql(f"DROP TABLE {table}")
+    per_tick = {}
+    for r in rows:
+        per_tick.setdefault(r.tick, []).append(r)
+    assert all(len(v) == 1 for v in per_tick.values()), per_tick
+    assert all(r.source == "iss_now" and r.agent == "primary" for r in rows)
 
 
 def test_jsonl_sink_two_phase_commit(spark, tmp_path):
