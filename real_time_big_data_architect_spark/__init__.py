@@ -9,7 +9,8 @@ Spark-first:
   window functions, set ops, JSON/array/map functions) — ``operators/``,
   ``functions/``
 - ingestion: the reference's 10-source JSON normalization layer as
-  ``from_json`` pipelines + a Spark 4 Python DataSource for HTTP polling —
+  ``from_json`` pipelines + a concurrent HTTP poll of every source in the
+  driver, shared by the live loop and the snapshot queries —
   ``sources/``
 - streaming: the reference's 60 s poll tick as Structured Streaming, plus
   watermarks, tumbling/sliding/session windows and stateful ops —

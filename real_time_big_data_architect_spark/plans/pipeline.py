@@ -116,19 +116,15 @@ def run_poll_all_pipeline(  # noqa: PLR0913 - one optional knob per sink concern
     and appends one status row per source per tick. A failing or slow
     endpoint degrades only its own row (C2-C5 per source), never the
     tick. The poll plan is resolved here, once, so a source list beyond
-    ``MAX_POLL_ROWS_PER_BATCH`` is refused before any stream starts.
+    ``MAX_POLL_ROWS_PER_BATCH``, or a source key neither the catalog nor
+    an override can address, is refused before any stream starts.
     The micro-batch clock is ``rate-micro-batch`` (one row per batch,
     never read); a replayed batch re-polls, since a poll cannot be
     re-read.
     """
-    options = {}
-    if payload_dir:
-        options["payload_dir"] = payload_dir
-    if url_overrides:
-        options["urls"] = json.dumps(url_overrides)
-    if sources:
-        options["sources"] = ",".join(sources)
-    plan = poll_plan(options)
+    plan = poll_plan(
+        payload_dir=payload_dir, urls=url_overrides, sources=sources
+    )
     stream = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 1)

@@ -1,5 +1,5 @@
 """Ingestion layer: source catalog, payload schemas, JSON normalization,
-HTTP polling DataSource (reference Extract+Transform, app.py:40-189)."""
+HTTP poll (reference Extract+Transform, app.py:40-189)."""
 
 from real_time_big_data_architect_spark.sources.registry import SOURCES
 

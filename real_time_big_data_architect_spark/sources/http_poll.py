@@ -1,6 +1,6 @@
 """HTTP polling source (reference Extract stage, app.py:67-81).
 
-Three layers:
+Two layers:
 
 - :func:`fetch` — the reference's fetch semantics re-implemented with
   stdlib urllib (no ``requests`` dependency): 15 s timeout, optional
@@ -10,24 +10,24 @@ Three layers:
   thread per source, in the calling process: one row ``(fetch_ts,
   source, payload, error)`` per source, in plan order. The live loop
   (:func:`plans.pipeline.run_poll_all_pipeline`) calls it inside its
-  ``foreachBatch``, so a tick starts no Python worker for the poll.
-- :class:`HttpPollAllDataSource` — a Spark 4 Python batch DataSource
-  (``format("http_poll_all")``) over the same plan, for the declared
-  snapshot queries: one row per source, each polled by its own task.
-  Downstream, ``sources.normalize`` turns each payload into its tidy
-  table. Gated behind an import-try — the API is young (tests use
-  fixture payloads, no network; SURVEY §7 M4).
+  ``foreachBatch`` on every tick; the declared snapshot queries below
+  call it once, when the query is built, and hand its rows to Spark as
+  a JVM-side literal relation (``tables.jvm_local_df``). Downstream,
+  ``sources.normalize`` turns each payload into its tidy table. Tests
+  use fixture payloads, no network (SURVEY §7 M4).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import time
 import urllib.error
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
 
 from real_time_big_data_architect_spark.streaming import progress
+from real_time_big_data_architect_spark.tables import jvm_local_df
 
 
 #: hard byte ceiling on a single poll payload. The catalog endpoints
@@ -119,28 +119,33 @@ def _poll_source(item: tuple[str, dict]) -> tuple:
     return ts, key, payload, error
 
 
-def poll_plan(options: dict) -> list[tuple[str, dict]]:
+def poll_plan(
+    *,
+    payload_dir: str | None = None,
+    urls: dict[str, str] | None = None,
+    sources: list[str] | None = None,
+) -> list[tuple[str, dict]]:
     """Resolve the per-source polling plan: ``[(source_key,
     single-source options), ...]``.
 
-    Addressing, per source key (subset via csv option ``sources``;
-    default = the full 10-source catalog):
+    Addressing, per source key (``sources``; default = the full
+    10-source catalog):
     - ``payload_dir`` — OFFLINE: ``{dir}/{key}.json`` captured
       payloads (tests / the driver's no-network sandbox);
-    - ``urls`` — JSON object ``{key: url}`` overriding the catalog
-      URL (loopback servers in tests), falling back to the catalog
-      for keys not present;
+    - ``urls`` — ``{key: url}`` overriding the catalog URL (loopback
+      servers in tests), falling back to the catalog for keys not
+      present;
     - otherwise the catalog entry itself (live).
 
     Raises ``ValueError`` for more than ``MAX_POLL_ROWS_PER_BATCH``
-    sources: each source is one row per tick, so the cap on sources
-    is the cap on a batch's rows.
+    sources (each source is one row per tick, so the cap on sources is
+    the cap on a batch's rows), and for a key that only the catalog
+    could address but the catalog does not hold.
     """
     from real_time_big_data_architect_spark.sources.registry import SOURCES
 
-    keys = [
-        k for k in options.get("sources", ",".join(SOURCES)).split(",") if k
-    ]
+    keys = list(sources or SOURCES)
+    urls = urls or {}
     if len(keys) > MAX_POLL_ROWS_PER_BATCH:
         raise ValueError(
             f"poll plan: {len(keys)} sources exceed"
@@ -148,15 +153,19 @@ def poll_plan(options: dict) -> list[tuple[str, dict]]:
             " source is one row per tick, and a tick's rows live on the"
             " driver"
         )
-    overrides = json.loads(options.get("urls", "{}"))
+    if not payload_dir:
+        unknown = [k for k in keys if k not in urls and k not in SOURCES]
+        if unknown:
+            raise ValueError(
+                f"poll plan: unknown source(s) {unknown}: not in the"
+                " catalog (registry.SOURCES) and given no URL override"
+            )
     plan = []
     for key in keys:
-        if "payload_dir" in options:
-            plan.append(
-                (key, {"payload_path": f"{options['payload_dir']}/{key}.json"})
-            )
-        elif key in overrides:
-            plan.append((key, {"url": overrides[key]}))
+        if payload_dir:
+            plan.append((key, {"payload_path": f"{payload_dir}/{key}.json"}))
+        elif key in urls:
+            plan.append((key, {"url": urls[key]}))
         else:
             plan.append((key, {"source": key}))
     return plan
@@ -178,105 +187,54 @@ def poll_all(plan: list[tuple[str, dict]]) -> list[tuple]:
         return list(pool.map(_poll_source, plan))
 
 
-try:
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
-
-    class _HttpMultiPollBatchReader(DataSourceReader):
-        """One-shot all-sources snapshot: a 10-row frame fetched by 10
-        parallel tasks."""
-
-        def __init__(self, options: dict[str, str]) -> None:
-            self._plan = poll_plan(dict(options))
-
-        def partitions(self):
-            return [InputPartition(item) for item in self._plan]
-
-        def read(self, partition):
-            yield _poll_source(partition.value)
-
-    class HttpPollAllDataSource(DataSource):
-        """``format("http_poll_all")`` — the concurrent every-source
-        snapshot (one row per source)."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "http_poll_all"
-
-        def schema(self) -> str:
-            return "fetch_ts double, source string, payload string, error string"
-
-        def reader(self, schema):
-            return _HttpMultiPollBatchReader(self.options)
-
-    def register_http_poll(spark) -> None:
-        """Make ``format("http_poll_all")`` resolvable in this session."""
-        spark.dataSource.register(HttpPollAllDataSource)
-
-    HTTP_POLL_AVAILABLE = True
-except ImportError:  # pragma: no cover - Python DataSource API unavailable
-    HttpPollAllDataSource = None  # type: ignore[assignment]
-    HTTP_POLL_AVAILABLE = False
-
-
-import os as _os
-
-_REPO_ROOT = _os.path.dirname(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 _USGS_FIXTURE = f"{_REPO_ROOT}/tests/payloads/usgs_quakes.json"
 _PAYLOAD_DIR = f"{_REPO_ROOT}/tests/payloads"
 
 
+#: column layout of :func:`poll_all` rows as a Spark relation
+_POLL_DDL = "fetch_ts double, source string, payload string, error string"
+
+
 def http_poll_usgs_snapshot(spark, sf_dir: str):  # noqa: ARG001
     """The reference's full S1→N5 path as one oracle-checked query:
-    http_poll_all datasource polling the one ``usgs_quakes`` source
-    (offline fixture payload) → declarative normalize. The oracle parses
-    the SAME JSON file with DuckDB's independent reader — two engines,
-    two JSON parsers, one answer. ``sf_dir`` is unused: the input is
-    the captured payload, the contract the reference actually
+    the live loop's poll (:func:`poll_all`) of the one ``usgs_quakes``
+    source (offline fixture payload) → declarative normalize. The oracle
+    parses the SAME JSON file with DuckDB's independent reader — two
+    engines, two JSON parsers, one answer. ``sf_dir`` is unused: the
+    input is the captured payload, the contract the reference actually
     consumes."""
     from real_time_big_data_architect_spark.sources.normalize import (
         normalize_usgs_quakes,
     )
 
-    register_http_poll(spark)
-    raw = (
-        spark.read.format("http_poll_all")
-        .option("payload_dir", _PAYLOAD_DIR)
-        .option("sources", "usgs_quakes")
-        .load()
+    raw = jvm_local_df(
+        spark,
+        poll_all(poll_plan(payload_dir=_PAYLOAD_DIR, sources=["usgs_quakes"])),
+        _POLL_DDL,
     )
     return normalize_usgs_quakes(raw.select("payload"))
 
 
 def http_poll_all_snapshot(spark, sf_dir: str):  # noqa: ARG001
-    """Concurrent ALL-sources snapshot through the ``http_poll_all``
-    datasource (offline fixture payloads): 10 parallel poll tasks →
-    each payload through its own normalize branch → one (source,
-    n_rows) row per catalog entry. Exceeds the reference's 1-source-
-    per-tick loop (app.py:57-61) while reusing its normalize semantics
-    (N1-N12) unchanged. The oracle recomputes every branch's row count
-    from the same JSON files with DuckDB's independent parser.
-    ``sf_dir`` is unused: the input is the captured payload catalog.
+    """Concurrent ALL-sources snapshot: one round of the live loop's
+    poll (:func:`poll_all`, offline fixture payloads) → each payload
+    through its own normalize branch → one (source, n_rows) row per
+    catalog entry. Exceeds the reference's 1-source-per-tick loop
+    (app.py:57-61) while reusing its normalize semantics (N1-N12)
+    unchanged. The poll runs once, when the query is built, so every
+    branch reads the same poll round. The oracle recomputes every
+    branch's row count from the same JSON files with DuckDB's
+    independent parser. ``sf_dir`` is unused: the input is the captured
+    payload catalog.
     """
     from real_time_big_data_architect_spark.sources.normalize import sql_over
     from real_time_big_data_architect_spark.sources.registry import SOURCES
 
-    register_http_poll(spark)
-    # persist the catalog-sized (10-row) poll result: the 10 normalize
-    # branches below each consume this relation, and without the cache
-    # every branch would re-execute the full catalog poll (100 reads
-    # offline; 100 HTTP fetches live, each source's count then coming
-    # from a DIFFERENT poll round than its siblings)
-    raw = (
-        spark.read.format("http_poll_all")
-        .option("payload_dir", _PAYLOAD_DIR)
-        .load()
-        .persist()
+    raw = jvm_local_df(
+        spark, poll_all(poll_plan(payload_dir=_PAYLOAD_DIR)), _POLL_DDL
     )
     # one normalize branch per catalog entry over the same snapshot
     # frame — a plan-level loop over the fixed 10-entry catalog
@@ -336,8 +294,6 @@ def stream_poll_all_tick(spark, sf_dir: str):  # noqa: ARG001
     # JVM-side VALUES relation: createDataFrame would wrap the 10 rows
     # in a Python-RDD scan, charging the caller's collect a Python
     # worker round-trip (see tables.jvm_local_df)
-    from real_time_big_data_architect_spark.tables import jvm_local_df
-
     return jvm_local_df(
         spark,
         [(r.source, r.n_rows, r.agent) for r in rows],

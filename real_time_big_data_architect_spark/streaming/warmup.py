@@ -1,9 +1,9 @@
 """Session-level subsystem warm-up for benchmarking harnesses.
 
 A Spark session pays several ONE-TIME bring-up costs the first time a
-subsystem is touched: the Python DataSource worker pool (first DSv2
-read/write), the micro-batch engine + memory sink machinery (first
-streaming drain), and the RocksDB state-store provider + the
+subsystem is touched: the Python DataSource worker pool (first
+``jsonl_sink`` write), the micro-batch engine + memory sink machinery
+(first streaming drain), and the RocksDB state-store provider + the
 transformWithStateInPandas Python runner (first stateful query). In a
 long-lived production session these are paid once at deploy; in a
 single-pass sweep they land on whichever DECLARED query happens to run
@@ -44,37 +44,22 @@ def warm_streaming_subsystems(
         timings[name] = round(time.perf_counter() - t, 3)
 
     def _pyds():
-        # Python DataSource worker pool: one 1-row batch READ through
-        # the http_poll_all source and one tiny WRITE through jsonl_sink.
+        # Python DataSource worker pool: one tiny WRITE through jsonl_sink.
         import shutil
         import tempfile
 
-        from real_time_big_data_architect_spark.sources.http_poll import (
-            _PAYLOAD_DIR,
-            register_http_poll,
-        )
         from real_time_big_data_architect_spark.sources.lake import (
-            JSONL_SINK_AVAILABLE,
             JsonlSinkDataSource,
         )
 
-        register_http_poll(spark)
-        (
-            spark.read.format("http_poll_all")
-            .option("payload_dir", _PAYLOAD_DIR)
-            .option("sources", "usgs_quakes")
-            .load()
-            .count()
-        )
-        if JSONL_SINK_AVAILABLE:
-            spark.dataSource.register(JsonlSinkDataSource)
-            work = tempfile.mkdtemp(prefix="warm_sink_")
-            try:
-                spark.range(4).selectExpr("id").write.format(
-                    "jsonl_sink"
-                ).option("path", work).mode("append").save()
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
+        spark.dataSource.register(JsonlSinkDataSource)
+        work = tempfile.mkdtemp(prefix="warm_sink_")
+        try:
+            spark.range(4).selectExpr("id").write.format("jsonl_sink").option(
+                "path", work
+            ).mode("append").save()
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
 
     def _microbatch():
         # Micro-batch engine + memory sink: drain the sf0.001 events

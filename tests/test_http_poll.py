@@ -108,9 +108,10 @@ def test_http_poll_datasource_end_to_end(spark, server):
     row carries the served payload, and the tick appends its status."""
     from real_time_big_data_architect_spark.plans import pipeline
 
-    options = {"sources": "binance", "urls": json.dumps({"binance": f"{server}/json"})}
     [(fetch_ts, source, payload, error)] = http_poll.poll_all(
-        http_poll.poll_plan(options)
+        http_poll.poll_plan(
+            sources=["binance"], urls={"binance": f"{server}/json"}
+        )
     )
     assert (source, error) == ("binance", None)
     assert json.loads(payload)["price"] == "64250.10"
@@ -151,6 +152,6 @@ def test_all_sources_stream_reader_fetches_every_source_at_once(monkeypatch):
         return 1.0, f"payload of {key}", None
 
     monkeypatch.setattr(http_poll, "_poll_once", concurrent_poll)
-    rows = http_poll.poll_all(http_poll.poll_plan({"payload_dir": "/payloads"}))
+    rows = http_poll.poll_all(http_poll.poll_plan(payload_dir="/payloads"))
     assert [r[1] for r in rows] == keys
     assert [r[2] for r in rows] == [f"payload of {k}" for k in keys]

@@ -98,8 +98,6 @@ def test_jsonl_sink_abort_survives_failed_task_messages(spark, tmp_path):
     files behind."""
     from real_time_big_data_architect_spark.sources import lake as L
 
-    if not L.JSONL_SINK_AVAILABLE:
-        pytest.skip("Python DataSource API unavailable")
     spark.dataSource.register(L.JsonlSinkDataSource)
     df = spark.range(12).selectExpr(
         "id AS event_id",

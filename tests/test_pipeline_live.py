@@ -13,7 +13,6 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 import pytest
 
 from real_time_big_data_architect_spark.plans import pipeline
-from real_time_big_data_architect_spark.sources.http_poll import HTTP_POLL_AVAILABLE
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -200,27 +199,6 @@ def test_oversized_poll_batch_fails_loudly(spark):
 _PAYLOAD_DIR = os.path.join(os.path.dirname(__file__), "payloads")
 
 
-@pytest.mark.skipif(not HTTP_POLL_AVAILABLE, reason="Python DataSource API unavailable")
-def test_poll_all_read_refuses_more_sources_than_the_row_cap(spark):
-    """The row cap is enforced where rows are created: each source is
-    one row per tick, so an http_poll_all read naming more sources than
-    MAX_POLL_ROWS_PER_BATCH is refused before any poll runs."""
-    from real_time_big_data_architect_spark.sources.http_poll import (
-        register_http_poll,
-    )
-
-    register_http_poll(spark)
-    keys = [f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)]
-    with pytest.raises(Exception, match="MAX_POLL_ROWS_PER_BATCH"):
-        (
-            spark.read.format("http_poll_all")
-            .option("payload_dir", _PAYLOAD_DIR)
-            .option("sources", ",".join(keys))
-            .load()
-            .collect()
-        )
-
-
 @pytest.mark.parametrize("source", ["binance", "usgs_quakes", "github_events"])
 def test_agents_branch_plans_no_exchange(spark, source):
     """One source's batch_insights branch (its normalize SQL over the
@@ -292,15 +270,17 @@ def test_malformed_values_degrade_only_their_own_sources(spark, tmp_path):
     quakes["features"][0]["properties"]["time"] = 9223372036854775000
     (payload_dir / "usgs_quakes.json").write_text(json.dumps(quakes))
     table = "status_all_malformed"
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        payload_dir=str(payload_dir),
-        status_table=table,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    rows = {r.source: r for r in spark.table(table).collect()}
-    spark.sql(f"DROP TABLE {table}")
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            payload_dir=str(payload_dir),
+            status_table=table,
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        rows = {r.source: r for r in spark.table(table).collect()}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert set(rows) == set(_FIXTURE_ROWS)
     bad = {"iss_now", "usgs_quakes"}
     for source, n in _FIXTURE_ROWS.items():
@@ -311,15 +291,32 @@ def test_malformed_values_degrade_only_their_own_sources(spark, tmp_path):
             assert (r.agent, r.n_rows) == ("primary", n), r
 
 
-def test_loop_refuses_more_sources_than_the_row_cap_before_starting(spark):
+@pytest.mark.parametrize(
+    ("plan", "match"),
+    [
+        (
+            {
+                "payload_dir": _PAYLOAD_DIR,
+                "sources": [
+                    f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)
+                ],
+            },
+            "MAX_POLL_ROWS_PER_BATCH",
+        ),
+        ({"sources": ["bogus"]}, "unknown source"),
+    ],
+    ids=["over_row_cap", "unknown_source"],
+)
+def test_loop_refuses_more_sources_than_the_row_cap_before_starting(
+    spark, plan, match
+):
     """The live loop resolves its poll plan at start: more sources than
-    MAX_POLL_ROWS_PER_BATCH are refused before any stream starts."""
-    keys = [f"s{i}" for i in range(pipeline.MAX_POLL_ROWS_PER_BATCH + 1)]
+    MAX_POLL_ROWS_PER_BATCH, or a source key that only the catalog could
+    address but the catalog does not hold, are refused before any
+    stream starts (an unknown key would otherwise fail every tick)."""
     before = len(spark.streams.active)
-    with pytest.raises(ValueError, match="MAX_POLL_ROWS_PER_BATCH"):
-        pipeline.run_poll_all_pipeline(
-            spark, payload_dir=_PAYLOAD_DIR, sources=keys, available_now=True
-        )
+    with pytest.raises(ValueError, match=match):
+        pipeline.run_poll_all_pipeline(spark, available_now=True, **plan)
     assert len(spark.streams.active) == before
 
 
@@ -329,48 +326,62 @@ def test_catalog_tick_runs_two_jobs(spark):
     micro-batch clock's row is never read, so neither adds a job (the
     per-tick collect of a Python DataSource poll batch was a third)."""
     table = "status_two_jobs"
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        payload_dir=_PAYLOAD_DIR,
-        status_table=table,
-        available_now=True,
-    )
-    assert q.awaitTermination(120)
-    sc = spark.sparkContext
-    # job events reach the status store through the async listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
-    n_status = spark.table(table).count()
-    spark.sql(f"DROP TABLE {table}")
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            payload_dir=_PAYLOAD_DIR,
+            status_table=table,
+            available_now=True,
+        )
+        assert q.awaitTermination(120)
+        sc = spark.sparkContext
+        # job events reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+        n_status = spark.table(table).count()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert [json.loads(p.json)["batchId"] for p in q.recentProgress] == [0]
     assert n_status == 10
     assert len(jobs) == 2, jobs
 
 
 def test_loop_needs_no_python_datasource(spark, monkeypatch):
-    """The live loop registers no Python DataSource: with registration
+    """The poll path registers no Python DataSource: with registration
     made to raise, a catalog tick still appends the correct status row
-    for every source."""
+    for every source, and both snapshot queries (the same poll, run
+    once) still return their rows."""
     from pyspark.sql.datasource import DataSourceRegistration
 
+    from real_time_big_data_architect_spark.sources.http_poll import (
+        http_poll_all_snapshot,
+        http_poll_usgs_snapshot,
+    )
+
     def refuse(self, dataSource):  # noqa: ARG001
-        raise AssertionError("the live loop registered a Python DataSource")
+        raise AssertionError("the poll path registered a Python DataSource")
 
     monkeypatch.setattr(DataSourceRegistration, "register", refuse)
     table = "status_no_pyds"
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        payload_dir=_PAYLOAD_DIR,
-        status_table=table,
-        available_now=True,
-    )
-    assert q.awaitTermination(120)
-    assert q.exception() is None
-    rows = {r.source: r for r in spark.table(table).collect()}
-    spark.sql(f"DROP TABLE {table}")
+    try:
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            payload_dir=_PAYLOAD_DIR,
+            status_table=table,
+            available_now=True,
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        rows = {r.source: r for r in spark.table(table).collect()}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert {s: (r.tick, r.agent, r.n_rows) for s, r in rows.items()} == {
         s: (0, "primary", n) for s, n in _FIXTURE_ROWS.items()
     }
+    snapshot = http_poll_all_snapshot(spark, "").collect()
+    assert {r.source: r.n_rows for r in snapshot} == _FIXTURE_ROWS
+    assert len(snapshot) == 10
+    assert len(http_poll_usgs_snapshot(spark, "").collect()) == 3
 
 
 def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
@@ -382,23 +393,25 @@ def test_poll_all_offsets_keep_rising_across_restart(spark, tmp_path):
     table = "status_all_restart"
     sources = ["binance", "iss_now"]
     offsets = []
-    for _ in range(2):
-        q = pipeline.run_poll_all_pipeline(
-            spark,
-            payload_dir=_PAYLOAD_DIR,
-            sources=sources,
-            status_table=table,
-            available_now=True,
-            checkpoint_location=ckpt,
-        )
-        assert q.awaitTermination(120)
-        for p in q.recentProgress:
-            src = json.loads(p.json)["sources"][0]
-            offsets.append((src["startOffset"], src["endOffset"]))
-    ticks = [end["offset"] for _, end in offsets]
-    assert len(ticks) >= 2 and ticks == sorted(set(ticks)), offsets
-    rows = spark.table(table).collect()
-    spark.sql(f"DROP TABLE {table}")
+    try:
+        for _ in range(2):
+            q = pipeline.run_poll_all_pipeline(
+                spark,
+                payload_dir=_PAYLOAD_DIR,
+                sources=sources,
+                status_table=table,
+                available_now=True,
+                checkpoint_location=ckpt,
+            )
+            assert q.awaitTermination(120)
+            for p in q.recentProgress:
+                src = json.loads(p.json)["sources"][0]
+                offsets.append((src["startOffset"], src["endOffset"]))
+        ticks = [end["offset"] for _, end in offsets]
+        assert len(ticks) >= 2 and ticks == sorted(set(ticks)), offsets
+        rows = spark.table(table).collect()
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     by_tick: dict[int, list[str]] = {}
     for r in rows:
         by_tick.setdefault(r.tick, []).append(r.source)
@@ -414,23 +427,27 @@ def test_status_append_keeps_headline_bytes(spark, multi_server, table_exists):
     appends to one that already exists."""
     table = f"status_odd_{int(table_exists)}"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if table_exists:
-        spark.sql(
-            f"CREATE TABLE {table} ({pipeline.STATUS_SCHEMA}) USING parquet"
+    try:
+        if table_exists:
+            spark.sql(
+                f"CREATE TABLE {table} ({pipeline.STATUS_SCHEMA}) USING parquet"
+            )
+            spark.sql(
+                f"INSERT INTO {table} VALUES (99, 'earlier', 0, 'x', 'fallback')"
+            )
+        q = pipeline.run_poll_all_pipeline(
+            spark,
+            url_overrides={"usgs_quakes": f"{multi_server}/odd_quake"},
+            sources=["usgs_quakes"],
+            status_table=table,
+            available_now=True,
         )
-        spark.sql(f"INSERT INTO {table} VALUES (99, 'earlier', 0, 'x', 'fallback')")
-    q = pipeline.run_poll_all_pipeline(
-        spark,
-        url_overrides={"usgs_quakes": f"{multi_server}/odd_quake"},
-        sources=["usgs_quakes"],
-        status_table=table,
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    status = spark.table(table)
-    types = dict(status.dtypes)
-    rows = {r.source: r for r in status.collect()}
-    spark.sql(f"DROP TABLE {table}")
+        q.awaitTermination(120)
+        status = spark.table(table)
+        types = dict(status.dtypes)
+        rows = {r.source: r for r in status.collect()}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert (types["tick"], types["n_rows"]) == ("bigint", "bigint")
     assert set(rows) == ({"usgs_quakes", "earlier"} if table_exists else {"usgs_quakes"})
     quake = rows["usgs_quakes"]

@@ -1,6 +1,6 @@
-"""Spark 4 Python DataSources over the captured payload fixtures: the
-http_poll_all batch snapshot with the normalize layer stacked on top,
-the live loop's ticks, and the jsonl_sink writer."""
+"""The poll primitive over the captured payload fixtures: poll rows
+with the normalize layer stacked on top, the live loop's ticks, and the
+jsonl_sink Python DataSource writer."""
 
 from __future__ import annotations
 
@@ -9,42 +9,42 @@ import time
 
 from real_time_big_data_architect_spark.sources import normalize
 from real_time_big_data_architect_spark.sources.http_poll import (
-    register_http_poll,
+    poll_all,
+    poll_plan,
 )
+from real_time_big_data_architect_spark.tables import jvm_local_df
 
 PAYLOADS = os.path.join(os.path.dirname(__file__), "payloads")
 
 
-def _read(spark, source, payload_dir=PAYLOADS):
-    register_http_poll(spark)
-    return (
-        spark.read.format("http_poll_all")
-        .option("payload_dir", payload_dir)
-        .option("sources", source)
-        .load()
-    )
+def _read(source, payload_dir=PAYLOADS):
+    return poll_all(poll_plan(payload_dir=payload_dir, sources=[source]))
 
 
-def test_batch_read_returns_raw_payload(spark):
-    rows = _read(spark, "usgs_quakes").collect()
-    assert len(rows) == 1
-    assert rows[0].error is None
-    assert '"features"' in rows[0].payload
+def test_batch_read_returns_raw_payload():
+    [(_fetch_ts, _source, payload, error)] = _read("usgs_quakes")
+    assert error is None
+    assert '"features"' in payload
 
 
 def test_normalize_stacks_on_datasource(spark):
     """The same declarative pipeline used everywhere else parses the
-    datasource output — source emits raw, normalize owns parsing."""
-    df = _read(spark, "usgs_quakes").select("payload")
+    poll output — the poll emits raw, normalize owns parsing."""
+    df = jvm_local_df(
+        spark,
+        _read("usgs_quakes"),
+        "fetch_ts double, source string, payload string, error string",
+    ).select("payload")
     out = normalize.normalize_usgs_quakes(df).collect()
     assert len(out) > 0
     assert {"mag", "place"} <= set(out[0].asDict())
 
 
-def test_missing_payload_file_degrades_to_error_row(spark):
-    rows = _read(spark, "x", payload_dir="/nonexistent").collect()
+def test_missing_payload_file_degrades_to_error_row():
+    rows = _read("x", payload_dir="/nonexistent")
     assert len(rows) == 1
-    assert rows[0].payload is None and rows[0].error
+    [(_fetch_ts, _source, payload, error)] = rows
+    assert payload is None and error
 
 
 def test_streaming_ticks_produce_one_row_per_batch(spark, tmp_path):
@@ -52,13 +52,9 @@ def test_streaming_ticks_produce_one_row_per_batch(spark, tmp_path):
     source once and appends one status row. Run with a fast trigger,
     wait for >=2 ticks, stop."""
     from real_time_big_data_architect_spark.plans import pipeline
-    from real_time_big_data_architect_spark.sources.http_poll import (
-        poll_all,
-        poll_plan,
-    )
 
     [(_, _, payload, _)] = poll_all(
-        poll_plan({"payload_dir": PAYLOADS, "sources": "iss_now"})
+        poll_plan(payload_dir=PAYLOADS, sources=["iss_now"])
     )
     assert '"iss_position"' in payload
     table = "poll_ticks"
@@ -71,18 +67,22 @@ def test_streaming_ticks_produce_one_row_per_batch(spark, tmp_path):
         checkpoint_location=str(tmp_path / "ckpt"),
     )
     try:
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline:
-            n = spark.sql(f"SELECT COUNT(DISTINCT tick) c FROM {table}").first().c
-            if n >= 2:
-                break
-            time.sleep(0.5)
-        assert n >= 2, f"only {n} ticks arrived"
+        try:
+            deadline = time.time() + 60
+            n = 0
+            while time.time() < deadline:
+                n = spark.sql(
+                    f"SELECT COUNT(DISTINCT tick) c FROM {table}"
+                ).first().c
+                if n >= 2:
+                    break
+                time.sleep(0.5)
+            assert n >= 2, f"only {n} ticks arrived"
+        finally:
+            q.stop()
+        rows = spark.table(table).collect()
     finally:
-        q.stop()
-    rows = spark.table(table).collect()
-    spark.sql(f"DROP TABLE {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     per_tick = {}
     for r in rows:
         per_tick.setdefault(r.tick, []).append(r)
@@ -100,10 +100,6 @@ def test_jsonl_sink_two_phase_commit(spark, tmp_path):
 
     from real_time_big_data_architect_spark.sources import lake as L
 
-    if not L.JSONL_SINK_AVAILABLE:
-        import pytest
-
-        pytest.skip("Python DataSource API unavailable")
     spark.dataSource.register(L.JsonlSinkDataSource)
     df = spark.range(10).selectExpr(
         "id AS event_id", "id * 2 AS user_id",

@@ -76,7 +76,6 @@ CROSS_ALLOW = {
     "ann_recall_eval",       # top-k × top-k join (k·|queries| rows/side)
     "pca_certify",           # 1-row certification frame × count scalar
     "stream_poll_all_tick",  # 10-source status table (catalog-sized)
-    "http_poll_all_snapshot",  # same catalog-sized status relation
     "cdc_diff",              # max-version scalar (1 row)
     "rfm_segments",          # global anchor-timestamp scalar (1 row)
     "orders_backlog_aging",  # anchor-date + open-total scalars (1 row each)
@@ -115,8 +114,6 @@ GLOBAL_WINDOW_ALLOW = {
     "retention_cohorts",     # cohort × week matrix (dimension-sized)
     "mix_reweight",          # |source| rows
     "stream_poll_all_tick",  # 10-row per-tick status
-    "http_poll_all_snapshot",
-    "http_poll_usgs_snapshot",
 }
 
 # Arrow-batched Python crossings (ArrowEvalPython / MapInPandas /
