@@ -513,9 +513,15 @@ def pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.write.format("jsonl_sink").option("path", work).mode(
             "append"
         ).save()
-        back = spark.read.schema(
-            "event_id long, user_id long, event_type string, value double"
-        ).json(f"{work}/*.jsonl")
+        # the directory, not a glob: a glob path makes the reader probe
+        # ``<glob>/_spark_metadata`` and log a FileNotFoundException
+        back = (
+            spark.read.schema(
+                "event_id long, user_id long, event_type string, value double"
+            )
+            .option("pathGlobFilter", "*.jsonl")
+            .json(work)
+        )
         a, b = ev.alias("a"), back.alias("b")
         j = a.join(b, F.col("a.event_id") == F.col("b.event_id"))
         summary = j.agg(
